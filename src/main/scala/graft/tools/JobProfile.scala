@@ -20,7 +20,7 @@ object JobProfile {
                  var gcMs: Long = 0L, var shufReadB: Long = 0L,
                  var shufWriteB: Long = 0L, var desc: String = "")
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, J]()
-    val stageToJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val stageToJob = new java.util.concurrent.ConcurrentHashMap[Int, Integer]()
     // SQL execution id → description: AQE submits each query stage as
     // its own job from a thread pool that does NOT carry the caller's
     // job-description property, so anonymous stage jobs are attributed
@@ -49,10 +49,11 @@ object JobProfile {
       Option(jobs.get(e.jobId)).foreach(_.t1 = e.time)
     }
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-      // membership check first: an unknown stage must DROP the event,
-      // not unbox null to job id 0 (ADVICE r16)
-      if (!stageToJob.containsKey(e.stageId)) return
+      // one lookup: an unknown stage must DROP the event, not unbox null
+      // to job id 0 (ADVICE r16), and a separate containsKey would race
+      // with reset()
       val jid = stageToJob.get(e.stageId)
+      if (jid == null) return
       Option(jobs.get(jid)).foreach { j =>
         j.synchronized {
           j.tasks += 1

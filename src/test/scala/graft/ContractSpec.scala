@@ -93,7 +93,7 @@ class ContractSpec extends AnyFunSuite with SparkTestBase {
   test("Engine facade: wordlist existence end-to-end") {
     import graft.operators.WordlistSearch._
     val ranges = Seq(ChunkRange(1, 'a', 'm'), ChunkRange(2, 'm', 'z'))
-    val dir = java.nio.file.Files.createTempDirectory("eng_wl").toString
+    val dir = SparkTestBase.tmpDir("eng_wl")
     writeBucketed(Seq("alpha", "zulu"), ranges, dir)
     assert(Engine.exists(spark, dir, ranges, "alpha"))
     assert(!Engine.exists(spark, dir, ranges, "beta"))
