@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
 import graft.functions.TextAnalysis._
 
 /** Document deduplication operators for the training-data pipeline:
@@ -586,16 +587,20 @@ object Dedup {
     * every component's label IS its minimum id), and label `docs` with
     * one left join against the local relation. One collect job where
     * the distributed loops pay ~2 jobs per round. Returns None when
-    * the evidence overflows the bound (the loops take over, output-
-    * identical). Ids pass through a long cast both ways so the output
-    * schema matches the loop's exactly whatever integral type the
-    * caller's id column has.
+    * the evidence overflows the bound, or when the id column or a pair
+    * column is not of an integral type, which the union-find's long
+    * keys cannot hold (the loops take over, output-identical). Ids pass
+    * through a long cast both ways so the output schema matches the
+    * loop's exactly whatever integral type the caller's id column has.
     */
   private def driverClusters(docs: DataFrame, idCol: String,
                              p: DataFrame,
                              bound: Long = LabelStore.MaxDriverEdges): Option[DataFrame] = {
     val spark = docs.sparkSession
     import spark.implicits._
+    val idType = docs.select(col(idCol)).schema.head.dataType
+    if (!(idType +: p.select(col("d1"), col("d2")).schema.map(_.dataType))
+        .forall(Set[DataType](ByteType, ShortType, IntegerType, LongType).contains)) return None
     val arr = Prof.labeled(spark, "cc.collect") {
       p.select(col("d1").cast("long"), col("d2").cast("long"))
         .limit(math.min(bound + 1, Int.MaxValue.toLong).toInt).collect()
@@ -606,7 +611,6 @@ object Dedup {
     val buf = new Array[(Long, Long)](mini.size())
     var i = 0
     mini.forEach { (id, rt) => buf(i) = (id, rt); i += 1 }
-    val idType = docs.select(col(idCol)).schema.head.dataType
     Some(docs.select(col(idCol).as("doc_id"))
       .join(buf.toSeq.toDF("doc_id", "canonical")
           .select(col("doc_id").cast(idType).as("doc_id"),

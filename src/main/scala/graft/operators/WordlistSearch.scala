@@ -4,16 +4,19 @@ import java.nio.file.{Files, Paths}
 import java.nio.charset.StandardCharsets
 import java.util.Arrays
 
+import scala.collection.mutable.{ArrayBuffer, ArrayBuilder}
 import scala.concurrent.{Await, ExecutionContext, Future, Promise}
 import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.hadoop.io.compress.CompressionCodecFactory
 import org.apache.spark.{SparkContext, TaskContext}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, XXH64}
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution.PartitionedFileUtil
 import org.apache.spark.sql.execution.datasources.{FilePartition, FileScanRDD,
@@ -21,7 +24,9 @@ import org.apache.spark.sql.execution.datasources.{FilePartition, FileScanRDD,
 import org.apache.spark.sql.execution.datasources.text.TextFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.util.SerializableConfiguration
+import org.apache.spark.util.sketch.BloomFilter
 
 /** Reference-parity core: the distributed existence query over a
   * range-partitioned wordlist — the entire capability of
@@ -46,6 +51,11 @@ import org.apache.spark.util.SerializableConfiguration
   *    at its first matching line
   *  - master OR + sibling abort (`server.go:277-303`) → one map-only
   *    job; the driver cancels it on the first task that reports a hit.
+  *
+  * Beyond the reference, which scans its chunks for every probe, a
+  * Bloom filter over each file's lines (kept per file version by
+  * [[exists]]) answers most misses with no job at all: a file whose
+  * filter rules the probe out is not scanned.
   *
   * On Spark 4.1 the DataFrame form `filter(===).isEmpty` is none of the
   * last three: it plans through Catalyst on every call and runs two
@@ -156,27 +166,185 @@ object WordlistSearch {
     * candidate = :pw)` with pruning + early termination. Case-SENSITIVE
     * row filter over case-INSENSITIVE pruning, like the reference.
     *
-    * One map-only job over [[probeSplits]], with no Catalyst plan and no
-    * shuffle: each task scans its split until the first line whose
-    * bytes equal the probe's UTF-8 bytes (the comparison `find`'s
-    * `value === pw` makes), and the driver cancels the job on the first
-    * task that reports a hit. A scan failure fails the call.
+    * At most one map-only job over [[probeSplits]], with no Catalyst
+    * plan and no shuffle. First every listed file whose line filter
+    * rules the probe out is dropped; if no file is left the answer is
+    * `false` and no job runs. Each task of the one job scans its split
+    * until the first line whose bytes equal the probe's UTF-8 bytes
+    * (the comparison `find`'s `value === pw` makes), and the driver
+    * cancels the job on the first task that reports a hit, unless the
+    * job also builds filters: then every split runs to its end. A scan
+    * failure fails the call.
+    *
+    * Line filters: one Bloom filter a file version, over the 64-bit
+    * hashes of exactly the line bytes compared here, sized from the
+    * file's exact line count for a false-positive rate under 1%. A
+    * version is the qualified path, length and modification time that
+    * the call's own listing reports, so a new, removed, grown or
+    * rewritten file is seen by the next call. A filter has no false
+    * negatives; what could make it wrong is a file rewritten at the
+    * same length within one tick of a coarse modification clock. So a
+    * filter is only built for a file whose modification time is older
+    * than the call's listing by more than [[FreshMarginMs]]; a fresher
+    * file is scanned every time. Filters hold raw line bytes, so line
+    * endings, BOMs and encodings need no special case.
+    *
+    * A call builds the filters of the unfiltered files it scans, in
+    * listing order, while their sizes sum to at most [[MaxBuildBytes]]
+    * and their largest possible filters fit in [[LineFilters]]; its
+    * tasks return one 8-byte hash a line of those files to the driver.
+    * A compressed file, whose size does not bound its line count, is
+    * never built. Files left out are scanned as above with no filter,
+    * and a later call builds them if they then fit.
     */
   def exists(spark: SparkSession, base: String,
              ranges: Seq[ChunkRange], pw: String): Boolean = {
+    val listedAt = System.currentTimeMillis()
     val splits = probeSplits(spark, base, ranges, pw)
-    if (splits.isEmpty) return false
+    val target = pw.getBytes(StandardCharsets.UTF_8)
+    val hash = lineHash(target, target.length)
+    val filters = splits.flatMap(_.files).distinctBy(_.filePath)
+      .flatMap(f => LineFilters.get(f).map(f.filePath.urlEncoded -> _)).toMap
+    val left = splits.map(_.files.filter(f =>
+      filters.get(f.filePath.urlEncoded).forall(_.mightContainLong(hash)))).filter(_.nonEmpty)
+    if (left.isEmpty) return false
+    val hadoopConf = sessionHadoopConf(spark)
+    lazy val codecs = new CompressionCodecFactory(hadoopConf)
+    var budget = MaxBuildBytes
+    var room = LineFilters.room()
+    val build = left.flatten.distinctBy(_.filePath).filter { f =>
+      val need = filterBytes(f.fileSize + 1)
+      val take = !filters.contains(f.filePath.urlEncoded) &&
+        listedAt - f.modificationTime > FreshMarginMs && codecs.getCodec(f.toPath) == null &&
+        f.fileSize <= budget && need <= room
+      if (take) { budget -= f.fileSize; room -= need }
+      take
+    }.map(_.filePath.urlEncoded).toSet
+    val parts = left.zipWithIndex.map { case (files, i) => FilePartition(i, files) }
     val sc = spark.sparkContext
-    val conf = TaskConf(sc, sessionHadoopConf(spark))
-    val scan = new FileScanRDD(spark, scanSplit(conf, pw.getBytes(StandardCharsets.UTF_8)),
-      splits, new StructType())
+    val scan = new FileScanRDD(spark, scanSplit(TaskConf(sc, hadoopConf), target, build),
+      parts, new StructType())
+    val scans = ArrayBuffer.empty[SplitScan]
     val hit = Promise[Unit]()
-    val job = sc.submitJob(scan, (rows: Iterator[InternalRow]) => rows.hasNext,
-      splits.indices, (_: Int, found: Boolean) => if (found) hit.trySuccess(()), ())
+    val job = sc.submitJob(scan,
+      (rows: Iterator[InternalRow]) => rows.map(_.get(0, null).asInstanceOf[SplitScan]).toArray,
+      parts.indices, (_: Int, part: Array[SplitScan]) => {
+        scans.synchronized(scans ++= part)
+        if (build.isEmpty && part.exists(_.found)) hit.trySuccess(())
+      }, ())
     Await.ready(Future.firstCompletedOf(Seq(job, hit.future))(ExecutionContext.parasitic),
       Duration.Inf)
-    if (hit.isCompleted) { job.cancel(); true }
-    else { Await.result(job, Duration.Inf); false }
+    if (hit.isCompleted) { job.cancel(); return true }
+    Await.result(job, Duration.Inf)
+    LineFilters.build(parts.flatMap(_.files).filter(f => build(f.filePath.urlEncoded)), scans.toSeq)
+    scans.exists(_.found)
+  }
+
+  /** A line filter's bits a line: with the 7 probes spark-sketch picks
+    * for it, a false-positive rate of `(1 − e^(−7/10))^7` ≈ 0.82%.
+    */
+  private val BitsPerLine = 10
+  /** How much older than a call's listing a file must be for its filter
+    * to be built: more than the coarsest modification clock (2 s, FAT)
+    * of the file systems a wordlist may sit on.
+    */
+  private val FreshMarginMs = 2000L
+  /** The line filters' total size, at most (~54M lines). */
+  private val FilterCapBytes = 64L << 20
+  /** The most file bytes one call builds filters for. A file of `n`
+    * bytes has at most `n + 1` lines, so this bounds the 8-byte hashes a
+    * call ships to the driver: ~256 MiB if every line were empty, ~30 MB
+    * for 8-character words.
+    */
+  private val MaxBuildBytes = 32L << 20
+  /** A filter is dropped to make room for another only after it has
+    * gone unused this long, so a working set of filters larger than
+    * [[FilterCapBytes]] is not rebuilt over and over: the files that
+    * do not fit are scanned with no filter instead.
+    */
+  private val IdleMs = 60000L
+
+  /** The bytes of a filter over `lines` lines, as spark-sketch sizes it:
+    * [[BitsPerLine]] bits a line, in whole 64-bit words.
+    */
+  private def filterBytes(lines: Long): Long = (math.max(1L, lines) * BitsPerLine + 63) / 64 * 8
+
+  /** The 64-bit hash a line filter holds for a line's bytes. */
+  private def lineHash(bytes: Array[Byte], length: Int): Long =
+    XXH64.hashUnsafeBytes(bytes, Platform.BYTE_ARRAY_OFFSET, length, 42L)
+
+  /** One file split's scan result: whether a line equals the probe and,
+    * if the split's file is building its filter, every line's hash.
+    */
+  private case class SplitScan(path: String, found: Boolean, hashes: Array[Long])
+
+  /** The line filters of the file versions [[exists]] has scanned to
+    * their ends, least recently used first, at most [[FilterCapBytes]]
+    * in all; only filters idle for [[IdleMs]] are dropped to make room.
+    * One entry a path: a newer version of the file replaces it.
+    */
+  private object LineFilters {
+    private final class Entry(val length: Long, val modified: Long, val filter: BloomFilter) {
+      val bytes: Long = filter.bitSize / 8
+      var used: Long = System.currentTimeMillis()
+    }
+    private val entries = new java.util.LinkedHashMap[String, Entry](16, 0.75f, true)
+    private var bytes = 0L
+
+    /** The filter of this split's file version, if one is kept. */
+    def get(f: PartitionedFile): Option[BloomFilter] = synchronized {
+      val path = f.filePath.urlEncoded
+      Option(entries.get(path)).flatMap { e =>
+        if (e.length == f.fileSize && e.modified == f.modificationTime) {
+          e.used = System.currentTimeMillis()
+          Some(e.filter)
+        } else { remove(path); None }
+      }
+    }
+
+    /** The bytes of filters that could be added now: the free space and
+      * the filters unused for more than [[IdleMs]].
+      */
+    def room(): Long = synchronized {
+      val now = System.currentTimeMillis()
+      FilterCapBytes - bytes +
+        entries.values.asScala.iterator.takeWhile(now - _.used > IdleMs).map(_.bytes).sum
+    }
+
+    /** Keep a filter for each file of `files` (every split of the files
+      * the job built) whose every split reported a scan: a split that
+      * `ignoreCorruptFiles` or `ignoreMissingFiles` skipped reports none.
+      */
+    def build(files: Seq[PartitionedFile], scans: Seq[SplitScan]): Unit = {
+      val byPath = scans.filter(_.hashes != null).groupBy(_.path)
+      files.groupBy(_.filePath.urlEncoded).foreach { case (path, splits) =>
+        byPath.get(path).filter(_.size == splits.size).foreach { parts =>
+          val lines = math.max(1L, parts.map(_.hashes.length.toLong).sum)
+          val filter = BloomFilter.create(lines, lines * BitsPerLine)
+          parts.foreach(_.hashes.foreach(filter.putLong))
+          put(path, new Entry(splits.head.fileSize, splits.head.modificationTime, filter))
+        }
+      }
+    }
+
+    /** Keep `e`, first dropping idle filters, least recently used first,
+      * while it does not fit; if it still does not fit it is not kept.
+      */
+    private def put(path: String, e: Entry): Unit = synchronized {
+      remove(path)
+      val now = System.currentTimeMillis()
+      val lru = entries.values.iterator
+      var idle = true
+      while (bytes + e.bytes > FilterCapBytes && idle && lru.hasNext) {
+        val old = lru.next()
+        idle = now - old.used > IdleMs
+        if (idle) { bytes -= old.bytes; lru.remove() }
+      }
+      if (bytes + e.bytes <= FilterCapBytes) { entries.put(path, e); bytes += e.bytes }
+    }
+
+    private def remove(path: String): Unit =
+      Option(entries.remove(path)).foreach(e => bytes -= e.bytes)
   }
 
   /** The Hadoop configuration a `textFile` read of this session uses:
@@ -208,25 +376,32 @@ object WordlistSearch {
     }
   }
 
-  /** One file split's scan: a single row if some line of the split
-    * equals `target` byte for byte, else none. A cancelled task stops
-    * within 4096 lines; `FileScanRDD` then raises the kill.
+  /** One file split's scan. A split of a file in `build` is read to its
+    * end and yields one [[SplitScan]] with every line's hash; any other
+    * split stops at its first line that equals `target` byte for byte
+    * and yields a [[SplitScan]] only then. A cancelled task stops within
+    * 4096 lines; `FileScanRDD` then raises the kill.
     */
-  private def scanSplit(conf: Broadcast[SerializableConfiguration],
-                        target: Array[Byte]): PartitionedFile => Iterator[InternalRow] = file => {
+  private def scanSplit(conf: Broadcast[SerializableConfiguration], target: Array[Byte],
+                        build: Set[String]): PartitionedFile => Iterator[InternalRow] = file => {
     val ctx = TaskContext.get()
     val lines = new HadoopFileLinesReader(file, conf.value.value)
     ctx.addTaskCompletionListener[Unit](_ => lines.close())
+    val path = file.filePath.urlEncoded
+    val hashes = if (build(path)) ArrayBuilder.make[Long] else null
     val n = target.length
     var found = false
     var read = 0
-    while (!found && lines.hasNext && ((read & 0xFFF) != 0 || !ctx.isInterrupted())) {
+    while ((!found || hashes != null) && lines.hasNext && ((read & 0xFFF) != 0 || !ctx.isInterrupted())) {
       val line = lines.next()
-      found = line.getLength == n && Arrays.equals(line.getBytes, 0, n, target, 0, n)
+      found ||= line.getLength == n && Arrays.equals(line.getBytes, 0, n, target, 0, n)
+      if (hashes != null) hashes += lineHash(line.getBytes, line.getLength)
       read += 1
     }
     lines.close()
-    if (found) Iterator.single(InternalRow.empty) else Iterator.empty
+    if (!found && hashes == null) Iterator.empty
+    else Iterator.single(new GenericInternalRow(Array[Any](
+      SplitScan(path, found, if (hashes == null) null else hashes.result()))))
   }
 
   /** The generalized form: all matches with their source file (the

@@ -431,6 +431,14 @@ class Batch9Spec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("Engine.connectedComponents over string node ids labels each component with its least id") {
+    val s = spark
+    import s.implicits._
+    val edges = Seq("b" -> "a", "c" -> "b", "y" -> "x", "q" -> "q").toDF("src", "dst")
+    val got = Engine.connectedComponents(edges).collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(got === Map("a" -> "a", "b" -> "a", "c" -> "a", "x" -> "x", "y" -> "x", "q" -> "q"))
+  }
+
   test("p102: the distilled perceptron beats the majority-class baseline with a real split") {
     // guards the training demo against silent death by testdata
     // regeneration: the learned model must actually discriminate, not

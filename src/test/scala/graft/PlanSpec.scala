@@ -1,5 +1,10 @@
 package graft
 
+import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan regression guards: these queries were tuned to a
@@ -12,8 +17,13 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
 
   private val dir = "/root/testdata/sf0.001"
 
-  private def plan(name: String): String =
-    SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString
+  private def physical(name: String): SparkPlan =
+    SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan
+
+  private def plan(name: String): String = physical(name).toString
+
+  /** Plan-tree walks that see through adaptive execution's wrapper. */
+  private object Aqe extends AdaptiveSparkPlanHelper
 
   test("q03: dim side broadcasts (no sort-merge join in the star join)") {
     val p = plan("q03_join_broadcast")
@@ -377,11 +387,18 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     // pass locally and OOM the driver at 100 TB. The evidence-bounded
     // contraction's LocalTableScan is the one permitted build side;
     // oversized evidence degrades it to a non-broadcast join upstream.
-    assert("BroadcastExchange[^\n]*\n[^\n]*FileScan".r.findFirstIn(p).isEmpty,
-      "a corpus-side scan is being broadcast in p118")
-    if (p.contains("BroadcastHashJoin"))
-      assert(p.contains("LocalTableScan"),
-        "p118's broadcast build side is not the driver-contracted local relation")
+    // Checked on the plan tree: no file scan anywhere under a broadcast,
+    // and every broadcast join's build side reads only local relations.
+    val tree = physical("p118_soft_dedup")
+    Aqe.collectWithSubqueries(tree) { case b: BroadcastExchangeExec => b }.foreach { b =>
+      assert(b.collect { case f: FileSourceScanExec => f }.isEmpty,
+        s"a corpus-side scan is being broadcast in p118:\n$b")
+    }
+    Aqe.collectWithSubqueries(tree) { case j: BroadcastHashJoinExec => j }.foreach { j =>
+      val build = if (j.buildSide == BuildLeft) j.left else j.right
+      assert(build.collectLeaves().forall(_.isInstanceOf[LocalTableScanExec]),
+        s"p118's broadcast build side is not the driver-contracted local relation:\n$build")
+    }
   }
 
   test("p119: the scoring pass broadcasts the B-bounded weights; the band roll-up aggregates map-side") {

@@ -3,10 +3,13 @@ package graft
 import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.FileTime
 import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import java.util.zip.GZIPOutputStream
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 import scala.util.Random
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
@@ -21,6 +24,10 @@ import graft.operators.WordlistSearch._
   * it agrees with the DataFrame form (`find`) on every line-ending,
   * encoding, file-layout and split-boundary case `textFile` handles,
   * and it runs as one map-only job of one stage with one task a split.
+  * Its line filters are pinned too: each agreement sweep runs cold and
+  * again warm, a repeated miss runs no job, a fresh file is never
+  * filtered, and an appended, deleted or same-length rewritten file is
+  * seen by the next probe.
   */
 class WordlistSearchSpec extends AnyFunSuite with SparkTestBase {
 
@@ -42,21 +49,31 @@ class WordlistSearchSpec extends AnyFunSuite with SparkTestBase {
   private def bucketOf(w: String): Int =
     ranges.find(_.contains(w.toLowerCase.charAt(0))).getOrElse(ranges.last).id
 
-  private def agree(dir: String, probes: Seq[String]): Unit =
+  private def agree(dir: String, probes: Seq[String], pass: String = ""): Unit =
     probes.foreach { p =>
       assert(exists(spark, dir, ranges, p) === !find(spark, dir, ranges, p).isEmpty,
-        s"exists and find disagree on probe=${p.map(c => f"\\u${c.toInt}%04x").mkString}")
+        s"exists and find disagree on probe=${p.map(c => f"\\u${c.toInt}%04x").mkString} $pass")
     }
 
-  /** One bucket of ~3.6 MB (more than 3 MiB, so about four splits at 4
-    * cores) of 8-letter words starting with c, d or e, ended by LF or
-    * CRLF at random; the other buckets are empty. Returns the base and
-    * each line's word with its byte offset.
+  /** Date `path` (every file under it) `offsetMs` from now. A minute
+    * back is old enough for `exists` to keep the files' line filters;
+    * a minute ahead keeps them inside the 2 s freshness margin however
+    * long the test stalls before it probes.
     */
-  lazy val big: (String, IndexedSeq[(String, Long)]) = {
+  private def date(path: String, offsetMs: Long): Unit = {
+    val at = FileTime.fromMillis(System.currentTimeMillis() + offsetMs)
+    Files.walk(Paths.get(path)).filter(Files.isRegularFile(_)).forEach(Files.setLastModifiedTime(_, at))
+  }
+  private val Old = -60000L
+  private val Fresh = 60000L
+
+  /** One bucket file of ~3.6 MB (more than 3 MiB, so about four splits
+    * at 4 cores) of 8-letter words starting with c, d or e, ended by LF
+    * or CRLF at random. Returns its bytes and each line's word with its
+    * byte offset.
+    */
+  lazy val bigBucket: (Array[Byte], IndexedSeq[(String, Long)]) = {
     val rnd = new Random(7)
-    val dir = SparkTestBase.tmpDir("wordlist_big")
-    writeBucketed(Seq.empty, ranges, dir)
     val out = new ByteArrayOutputStream()
     val lines = IndexedSeq.fill(380000) {
       val w = (('c' + rnd.nextInt(3)).toChar +: Seq.fill(7)(('a' + rnd.nextInt(26)).toChar)).mkString
@@ -65,9 +82,21 @@ class WordlistSearchSpec extends AnyFunSuite with SparkTestBase {
       out.write((if (rnd.nextInt(4) == 0) "\r\n" else "\n").getBytes(UTF_8))
       (w, at)
     }
-    Files.write(Paths.get(dir, "bucket=2", "part-0.txt"), out.toByteArray)
-    (dir, lines)
+    (out.toByteArray, lines)
   }
+
+  /** A base whose bucket 2 holds [[bigBucket]] and whose other buckets
+    * are empty, every file dated `offsetMs` from now.
+    */
+  private def bigBase(tag: String, offsetMs: Long): String = {
+    val dir = SparkTestBase.tmpDir(tag)
+    writeBucketed(Seq.empty, ranges, dir)
+    Files.write(Paths.get(dir, "bucket=2", "part-0.txt"), bigBucket._1)
+    date(dir, offsetMs)
+    dir
+  }
+
+  lazy val big: (String, IndexedSeq[(String, Long)]) = (bigBase("wordlist_big", Old), bigBucket._2)
 
   test("chunksinfo parsing") {
     val parsed = parseChunkInfo(Seq("1=\u0004b", "2=bf", "3=fk"))
@@ -169,11 +198,14 @@ class WordlistSearchSpec extends AnyFunSuite with SparkTestBase {
         Files.write(bucket.resolve(".hidden.txt"), hidden.mkString("\n").getBytes(UTF_8))
       }
       ranges.foreach(r => Files.createDirectories(Paths.get(dir, s"bucket=${r.id}")))
+      date(dir, Old)
       val probes = corpus.take(20) ++ hidden ++ Seq.fill(5)(word()) ++
         corpus.take(3).flatMap(w => Seq(w + "\r", "\uFEFF" + w, w.toUpperCase))
-      agree(dir, probes)
-      corpus.take(20).foreach(w => assert(exists(spark, dir, ranges, w), s"missed $w"))
-      hidden.foreach(w => assert(!exists(spark, dir, ranges, w), s"read a hidden file for $w"))
+      for (pass <- Seq("cold", "warm")) {
+        agree(dir, probes, pass)
+        corpus.take(20).foreach(w => assert(exists(spark, dir, ranges, w), s"missed $w $pass"))
+        hidden.foreach(w => assert(!exists(spark, dir, ranges, w), s"read a hidden file for $w $pass"))
+      }
       val scanned = probeSplits(spark, dir, ranges, "a").flatMap(_.files.map(_.urlEncodedPath))
       assert(scanned.toSet === prunedScan(spark, dir, ranges, "a").inputFiles.toSet)
     }
@@ -190,8 +222,10 @@ class WordlistSearchSpec extends AnyFunSuite with SparkTestBase {
       val i = lines.lastIndexWhere(_._2 <= b)
       (i - 1 to i + 1).filter(lines.indices.contains).map(lines(_)._1)
     }
-    probes.foreach(p => assert(exists(spark, dir, ranges, p), s"missed $p"))
-    agree(dir, probes ++ probes.map(_.take(7)))
+    for (pass <- Seq("cold", "warm")) {
+      probes.foreach(p => assert(exists(spark, dir, ranges, p), s"missed $p $pass"))
+      agree(dir, probes ++ probes.map(_.take(7)), pass)
+    }
   }
 
   test("a missing bucket fails like find does") {
@@ -245,7 +279,8 @@ class WordlistSearchSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("plan shape: one exists call is one map-only job, one task a split") {
-    val (dir, lines) = big
+    val lines = bigBucket._2
+    val dir = bigBase("wordlist_shape", Old)
     val miss = "c" + "z" * 11
     val splits = probeSplits(spark, dir, ranges, miss).size
     assert(splits >= 4)
@@ -258,5 +293,88 @@ class WordlistSearchSpec extends AnyFunSuite with SparkTestBase {
     assert(hitFound)
     assert((hitShape.jobs, hitShape.stages, hitShape.plannedTasks, hitShape.shuffleBytes) ===
       ((1, 1, splits, 0L)))
+    // the first miss built the file's line filter, which now rules the miss out
+    val (warmFound, warmShape) = shapeOf(exists(spark, dir, ranges, miss))
+    assert(!warmFound && warmShape.jobs === 0)
+    // a file inside the freshness margin keeps no filter: every probe scans it
+    val fresh = bigBase("wordlist_shape_fresh", Fresh)
+    val freshSplits = probeSplits(spark, fresh, ranges, miss).size
+    for (_ <- 1 to 2) {
+      val (freshFound, freshShape) = shapeOf(exists(spark, fresh, ranges, miss))
+      assert(!freshFound)
+      assert((freshShape.jobs, freshShape.plannedTasks) === ((1, freshSplits)))
+    }
+  }
+
+  test("line filters: an appended, deleted or same-length rewritten file is seen by the next probe") {
+    val dir = SparkTestBase.tmpDir("wordlist_changes")
+    writeBucketed(words, ranges, dir)
+    date(dir, Old)
+    val w = "durian"
+    val part0 = Paths.get(dir, s"bucket=${bucketOf(w)}", "part-0.txt")
+    def probe(want: Boolean, what: String): Unit = {
+      assert(exists(spark, dir, ranges, w) === want, what)
+      agree(dir, Seq(w), what)
+    }
+    // the miss builds the bucket's filter, which then answers it with no job
+    probe(false, "before any change")
+    assert(shapeOf(exists(spark, dir, ranges, w))._2.jobs === 0)
+    val part1 = part0.resolveSibling("part-1.txt")
+    Files.write(part1, s"$w\n".getBytes(UTF_8))
+    probe(true, "after appending a part file holding the word")
+    Files.delete(part1)
+    probe(false, "after deleting the file that held the hit")
+    // part-0 written anew, probed while fresh, then rewritten at the same
+    // length within the same tick of a coarse modification clock: length
+    // and modification time both match the version the miss scanned
+    Files.write(part0, "banana\nfig".getBytes(UTF_8))
+    date(part0.toString, Fresh)
+    val tick = Files.getLastModifiedTime(part0)
+    probe(false, "with part-0 freshly rewritten")
+    Files.write(part0, "durian\nfig".getBytes(UTF_8))
+    Files.setLastModifiedTime(part0, tick)
+    probe(true, "after rewriting part-0 at the same length in the same tick")
+  }
+
+  test("line filters: concurrent probes agree with set membership while filters build") {
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    val corpus = (0 until 2000).map(i => s"${('a' + i % 26).toChar}w$i")
+    val dir = SparkTestBase.tmpDir("wordlist_concurrent")
+    writeBucketed(corpus, ranges, dir)
+    date(dir, Old)
+    val probes = corpus.take(40) ++ corpus.take(40).map(_ + "x")
+    val answers = Future.traverse((0 until 4).toList) { t =>
+      Future(new Random(t).shuffle(probes).map(p => p -> exists(spark, dir, ranges, p)))
+    }
+    Await.result(answers, Duration(5, TimeUnit.MINUTES)).flatten.foreach { case (p, got) =>
+      assert(got === corpus.contains(p), s"probe=$p")
+    }
+  }
+
+  test("line filters: files past one call's build limit are scanned, then built by later calls") {
+    // three ~11 MiB part files in one bucket: two fit in one call's 32 MiB
+    // build, the third does not
+    val rnd = new Random(11)
+    val dir = SparkTestBase.tmpDir("wordlist_build_limit")
+    writeBucketed(Seq.empty, ranges, dir)
+    val hits = (0 until 3).flatMap { i =>
+      val out = new ByteArrayOutputStream()
+      val ws = IndexedSeq.fill(1300000) {
+        val w = (('c' + rnd.nextInt(3)).toChar +: Seq.fill(7)(('a' + rnd.nextInt(26)).toChar)).mkString
+        out.write(s"$w\n".getBytes(UTF_8))
+        w
+      }
+      Files.write(Paths.get(dir, "bucket=2", s"part-$i.txt"), out.toByteArray)
+      Seq(ws.head, ws(ws.size / 2), ws.last)
+    }
+    date(dir, Old)
+    val miss = "c" + "z" * 11
+    val jobs = (1 to 3).map { _ =>
+      val (found, shape) = shapeOf(exists(spark, dir, ranges, miss))
+      assert(!found)
+      shape.jobs
+    }
+    assert(jobs === Seq(1, 1, 0), "the second call builds the file the first left out")
+    agree(dir, miss +: hits)
   }
 }
