@@ -573,20 +573,17 @@ object Dedup {
     * large-star/small-star contraction, which converges in O(log n)
     * rounds with the same per-round join shape.
     */
-  /** Diagnostic only: rounds the last dedupClusters / dedupClustersLogN
-    * call on this JVM took to converge (see tools.CCRounds). Not part
-    * of the operator contract; driver-side mutable state is fine here
-    * because the loops themselves run on the driver.
-    */
-  @volatile private[graft] var lastRoundsMinLabel: Int = -1
-  @volatile private[graft] var lastRoundsLogN: Int = -1
-
   /** The shared driver fast path of both cluster devices: collect the
     * (already checkpointed) pair list under the union-find bound,
     * contract it locally ([[LabelStore.unionFindMin]] — min-root, so
     * every component's label IS its minimum id), and label `docs` with
-    * one left join against the local relation. One collect job where
-    * the distributed loops pay ~2 jobs per round. Returns None when
+    * one left join against the local relation. One collect query where
+    * the distributed loops pay ~2 jobs per round. With `docsOnly` the
+    * union-find sees only the pairs whose two endpoints are both in
+    * `docs`, the subgraph the min-label loop propagates over: a count of
+    * the pairs checks the bound first, so an overflow declines without
+    * reading `docs`, and the collect semi-joins the pairs against `docs`
+    * on both endpoints. Returns None when
     * the evidence overflows the bound, or when the id column or a pair
     * column is not of an integral type, which the union-find's long
     * keys cannot hold (the loops take over, output-identical). Ids pass
@@ -594,15 +591,19 @@ object Dedup {
     * loop's exactly whatever integral type the caller's id column has.
     */
   private def driverClusters(docs: DataFrame, idCol: String,
-                             p: DataFrame,
-                             bound: Long = LabelStore.MaxDriverEdges): Option[DataFrame] = {
+                             p: DataFrame, docsOnly: Boolean,
+                             bound: Long): Option[DataFrame] = {
     val spark = docs.sparkSession
     import spark.implicits._
     val idType = docs.select(col(idCol)).schema.head.dataType
     if (!(idType +: p.select(col("d1"), col("d2")).schema.map(_.dataType))
         .forall(Set[DataType](ByteType, ShortType, IntegerType, LongType).contains)) return None
+    if (docsOnly && Prof.labeled(spark, "cc.collect")(p.count()) > bound) return None
     val arr = Prof.labeled(spark, "cc.collect") {
-      p.select(col("d1").cast("long"), col("d2").cast("long"))
+      val edges = p.select(col("d1").cast("long").as("d1"), col("d2").cast("long").as("d2"))
+      val ids = docs.select(col(idCol).cast("long").as("id"))
+      (if (docsOnly) edges.join(ids, col("d1") === col("id"), "left_semi")
+        .join(ids, col("d2") === col("id"), "left_semi") else edges)
         .limit(math.min(bound + 1, Int.MaxValue.toLong).toInt).collect()
     }
     if (arr.length > bound) return None
@@ -620,14 +621,11 @@ object Dedup {
         coalesce(col("canonical"), col("doc_id")).as("canonical")))
   }
 
-  /** PRECONDITION (shared by both cluster devices, made load-bearing by
-    * the driver fast path): pair endpoints are drawn from `docs`.
-    * Every in-repo caller derives its pairs from the same frame it
-    * labels. An endpoint outside `docs` would bridge or label
-    * components on the fast path where the distributed min-label loop
-    * ignored it (the loop propagates over the docs-induced subgraph);
-    * the logN device always bridged through outside nodes, so there
-    * the two paths agree unconditionally.
+  /** Pairs with an endpoint outside `docs` are ignored: the min-label
+    * loop propagates over the docs-induced subgraph, and the driver
+    * fast path contracts only that subgraph too, so an outside id never
+    * bridges two components on either path. (The logN device instead
+    * bridges through outside nodes on both of its paths.)
     */
   def dedupClusters(docs: DataFrame, idCol: String, pairs: DataFrame,
                     maxRounds: Int = 50,
@@ -645,8 +643,8 @@ object Dedup {
     // ~2 jobs per propagation round. Identical labels (DedupSpec pins
     // the loop against the union-find through the p123/p20 oracles);
     // oversized evidence falls through to the loop unchanged.
-    val fast = driverClusters(docs, idCol, p, maxDriverEdges)
-    if (fast.isDefined) { lastRoundsMinLabel = 0; return fast.get }
+    val fast = driverClusters(docs, idCol, p, docsOnly = true, maxDriverEdges)
+    if (fast.isDefined) return fast.get
     val e = p.select(col("d1").as("a"), col("d2").as("b"))
       .union(p.select(col("d2").as("a"), col("d1").as("b")))
       .localCheckpoint()
@@ -682,7 +680,6 @@ object Dedup {
       lbl = next
       iter += 1
     }
-    lastRoundsMinLabel = iter
     // Unconverged labels are silently wrong (a >maxRounds-diameter chain
     // would split one cluster into several) — fail loudly instead.
     if (!converged) {
@@ -748,7 +745,8 @@ object Dedup {
     * surface); the fixed point itself is unchanged.
     *
     * Seeding the loop with one min-label propagation pass was evaluated
-    * and declined (tools.CCRounds, round 4): real near-dup pair graphs
+    * and declined (round 4, measured by counting rounds per call on the
+    * p20/p33 corpora): real near-dup pair graphs
     * are already star-shaped and reach the fixed point in 2 rounds
     * (1 contraction + 1 checksum-stable confirmation — the floor), so a
     * seed pass costs one extra round-shaped shuffle and can save at
@@ -776,8 +774,8 @@ object Dedup {
     // graph, then restricted by the final left join), which is
     // precisely what the union-find does
     val p0 = pairs.select(col("d1"), col("d2")).localCheckpoint()
-    val fast = driverClusters(docs, idCol, p0, maxDriverEdges)
-    if (fast.isDefined) { lastRoundsLogN = 0; return fast.get }
+    val fast = driverClusters(docs, idCol, p0, docsOnly = false, maxDriverEdges)
+    if (fast.isDefined) return fast.get
     var edges = canon(p0.select(col("d1").as("u"), col("d2").as("v")))
       .localCheckpoint()
     var sig = checksum(edges)
@@ -814,7 +812,6 @@ object Dedup {
       edges = afterSmall
       iter += 1
     }
-    lastRoundsLogN = iter
     if (!converged) {
       throw new IllegalStateException(
         s"dedupClustersLogN did not reach its star fixed point after " +

@@ -116,9 +116,6 @@ object Pipeline11 {
     w
   }
 
-  /** Probe access for tools/PerceptronProbe — not library surface. */
-  private[graft] def featsOfProbe(docs: DataFrame): DataFrame = featsOf(docs)
-
   /** Per-JVM memo of the registered-corpus trained model — the
     * [[IndexStores]] discipline applied to classifier weights: p102,
     * p119 (calibration) and p122 (threshold curve) all consume the
@@ -149,7 +146,7 @@ object Pipeline11 {
     * the output (the returned model's training error is monotone
     * non-increasing in the budget), so the budget stops being a tuned
     * stopping point and becomes a cost cap. Measured on this corpus
-    * (tools/PerceptronProbe): the full sf0.1 trajectory OSCILLATES
+    * (per-round misclassification counts): the full sf0.1 trajectory OSCILLATES
     * between 73 and 733 misclassifications with no convergence by
     * round 40 — the failure mode p102's scaladoc documents — while
     * the best round (30: 73 mis ≈ 0.985 train accuracy) beats the
@@ -162,7 +159,8 @@ object Pipeline11 {
     * but RETURN the round whose weights misclassify the fewest
     * training documents (tie → latest round), not whichever endpoint
     * the budget stops on. Two properties make it the right device
-    * here, both measured (tools/PerceptronProbe):
+    * here, both measured on sf0.1 (per-round training and held-out
+    * accuracy):
     *
     *  - On non-separable corpora the raw batch trajectory oscillates
     *    (sf0.1: 73 ↔ 733 misclassifications round-to-round), so the

@@ -40,7 +40,7 @@ object Pipeline4 {
     * zip_with over shifted slices) explode from the materialized
     * arrays, so the corpus is scanned and regex-split exactly once.
     * Measured 3.4x faster than re-splitting per branch at sf0.1
-    * (tools.P29Variants: 1.65 s -> 0.49 s warm, identical output);
+    * (round 4, warm: 1.65 s -> 0.49 s, identical output);
     * same multi-consumer-expansion device as p03/p30/p34. Each branch
     * then shuffles one row per DISTINCT (doc, term) — map-side combine
     * absorbs within-doc repetition, which is exactly what repetitive

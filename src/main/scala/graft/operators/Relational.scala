@@ -322,8 +322,9 @@ object Relational {
 
   /** Existence query over text — the reference's Q_ref generalized to a
     * word-containment predicate (SURVEY §1.4: boolean existence result).
-    * The early-terminating scan (per-file line filters, then at most one
-    * map-only job cancelled on its first hit) is WordlistSearch.exists;
+    * The early-terminating scan (per-block line filters and a driver read
+    * of each candidate block, then at most one map-only job over the
+    * unfiltered files, cancelled on its first hit) is WordlistSearch.exists;
     * this DataFrame form is the oracle-checkable shape.
     */
   def q16ExistsText(s: SparkSession, d: String): DataFrame =

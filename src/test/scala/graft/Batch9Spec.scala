@@ -439,6 +439,19 @@ class Batch9Spec extends AnyFunSuite with SparkTestBase {
     assert(got === Map("a" -> "a", "b" -> "a", "c" -> "a", "x" -> "x", "y" -> "x", "q" -> "q"))
   }
 
+  test("Engine.dedupClusters: docs joined only through an id outside docs stay apart on both paths") {
+    val s = spark
+    import s.implicits._
+    // 3–4 lies inside docs, so with a bound of 0 the first call must
+    // decline the driver fast path and run the min-label loop
+    val docs = Seq(1L, 2L, 3L, 4L).toDF("doc_id")
+    val pairs = Seq(1L -> 9L, 9L -> 2L, 3L -> 4L).toDF("d1", "d2")
+    def labels(df: org.apache.spark.sql.DataFrame) = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val want = Map(1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 3L)
+    assert(labels(operators.Dedup.dedupClusters(docs, "doc_id", pairs, maxDriverEdges = 0)) === want)
+    assert(labels(Engine.dedupClusters(docs, "doc_id", pairs)) === want)
+  }
+
   test("p102: the distilled perceptron beats the majority-class baseline with a real split") {
     // guards the training demo against silent death by testdata
     // regeneration: the learned model must actually discriminate, not
@@ -488,8 +501,8 @@ class Batch9Spec extends AnyFunSuite with SparkTestBase {
     // held-out accuracy on the odd half must not regress, and it must
     // still beat the majority class. (Weight AVERAGING was measured
     // and rejected: the first ~13 all-positive-basin rounds dominate
-    // any average — held-out 0.928 vs raw 0.936; see
-    // tools/PerceptronProbe and the p107 scaladoc.)
+    // any average — held-out 0.928 vs raw 0.936; see the p107
+    // scaladoc.)
     val all = Tables.documents(spark, "/root/testdata/sf0.01")
     val train = all.filter(col("doc_id") % 2 === 0)
     val held = all.filter(col("doc_id") % 2 === 1)

@@ -25,9 +25,12 @@ import graft.operators.WordlistSearch._
   * encoding, file-layout and split-boundary case `textFile` handles,
   * and it runs as one map-only job of one stage with one task a split.
   * Its line filters are pinned too: each agreement sweep runs cold and
-  * again warm, a repeated miss runs no job, a fresh file is never
-  * filtered, and an appended, deleted or same-length rewritten file is
-  * seen by the next probe.
+  * again warm (the split-boundary sweep also at every 64 KiB block
+  * boundary), a repeated miss and a warm hit run no job, a fresh file
+  * or one with a line longer than a block is never filtered, a file too
+  * large for full-rate filters is filtered lean, a deleted
+  * file is skipped or fails as the scan job does, and an appended,
+  * deleted or same-length rewritten file is seen by the next probe.
   */
 class WordlistSearchSpec extends AnyFunSuite with SparkTestBase {
 
@@ -96,7 +99,34 @@ class WordlistSearchSpec extends AnyFunSuite with SparkTestBase {
     dir
   }
 
-  lazy val big: (String, IndexedSeq[(String, Long)]) = (bigBase("wordlist_big", Old), bigBucket._2)
+  /** One bucket file of ~260 KB of 8-letter words starting with c, d
+    * or e, laid out so that 64 KiB block boundaries cut it the ways a
+    * line can be cut: the first between a CRLF's `\r` and `\n`, the
+    * second just before an empty line, the third just after an LF.
+    * Returns its bytes and each line's word with its byte offset.
+    */
+  lazy val edgeBucket: (Array[Byte], IndexedSeq[(String, Long)]) = {
+    val rnd = new Random(13)
+    val out = new ByteArrayOutputStream()
+    val lines = IndexedSeq.newBuilder[(String, Long)]
+    def word(n: Int) = (('c' + rnd.nextInt(3)).toChar +: Seq.fill(n - 1)(('a' + rnd.nextInt(26)).toChar)).mkString
+    def put(w: String, end: String): Unit = {
+      lines += w -> out.size.toLong
+      out.write((w + end).getBytes(UTF_8))
+    }
+    // LF-ended lines up to byte `at`, the last one sized to end there
+    def fillTo(at: Long): Unit = {
+      while (at - out.size > 18) put(word(8), "\n")
+      put(word((at - out.size - 1).toInt), "\n")
+    }
+    fillTo(BlockBytes - 9)
+    put(word(8), "\r\n")
+    fillTo(2 * BlockBytes)
+    put("", "\n")
+    fillTo(3 * BlockBytes)
+    while (out.size < 4 * BlockBytes + 100) put(word(8), "\n")
+    (out.toByteArray, lines.result())
+  }
 
   test("chunksinfo parsing") {
     val parsed = parseChunkInfo(Seq("1=\u0004b", "2=bf", "3=fk"))
@@ -212,20 +242,70 @@ class WordlistSearchSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("property: exists == !find.isEmpty on words straddling split boundaries") {
-    val (dir, lines) = big
-    val splits = probeSplits(spark, dir, ranges, "c")
-    assert(splits.size >= 4, s"${splits.size} splits")
-    val boundaries = splits.flatMap(_.files).map(_.start).filter(_ > 0)
-    assert(boundaries.nonEmpty)
-    val probes = boundaries.flatMap { b =>
-      // the line holding byte b, and its neighbours on either side
-      val i = lines.lastIndexWhere(_._2 <= b)
-      (i - 1 to i + 1).filter(lines.indices.contains).map(lines(_)._1)
-    }
-    for (pass <- Seq("cold", "warm")) {
-      probes.foreach(p => assert(exists(spark, dir, ranges, p), s"missed $p $pass"))
+    // cold: files inside the freshness margin, so every probe runs the
+    // scan job; warm: old files whose block filters one miss has built,
+    // so every probe is answered on the driver
+    for ((pass, offset) <- Seq("cold" -> Fresh, "warm" -> Old)) {
+      val dir = bigBase(s"wordlist_boundaries_$pass", offset)
+      Files.write(Paths.get(dir, "bucket=2", "part-1.txt"), edgeBucket._1)
+      date(dir, offset)
+      val splits = probeSplits(spark, dir, ranges, "c")
+      assert(splits.size >= 4, s"${splits.size} splits")
+      val probes = Seq(bigBucket, edgeBucket).zipWithIndex.flatMap { case ((bytes, lines), part) =>
+        val starts = splits.flatMap(_.files).filter(_.urlEncodedPath.endsWith(s"part-$part.txt"))
+          .map(_.start).filter(_ > 0)
+        val boundaries = starts ++ (BlockBytes until bytes.length by BlockBytes)
+        assert(boundaries.nonEmpty)
+        boundaries.flatMap { b =>
+          // the line holding byte b, its neighbours on either side, and
+          // every line that starts within 2 bytes of b
+          val i = lines.lastIndexWhere(_._2 <= b)
+          (i - 1 to i + 1).filter(lines.indices.contains).map(lines(_)._1) ++
+            lines.collect { case (w, at) if math.abs(at - b) <= 2 => w }
+        }
+      }.filter(_.nonEmpty).distinct
+      if (pass == "warm") assert(!exists(spark, dir, ranges, "c" + "z" * 11))
+      val (_, shape) = shapeOf(probes.foreach(p => assert(exists(spark, dir, ranges, p), s"missed $p $pass")))
+      assert(shape.jobs === (if (pass == "warm") 0 else probes.size), pass)
       agree(dir, probes ++ probes.map(_.take(7)), pass)
     }
+    // a file with a line longer than a block keeps no filters: even
+    // warm, every probe of it runs the scan job
+    val dir = SparkTestBase.tmpDir("wordlist_long_line")
+    writeBucketed(Seq.empty, ranges, dir)
+    val long = "c" + "x" * BlockBytes.toInt
+    Files.write(Paths.get(dir, "bucket=2", "part-0.txt"), s"cab\n$long\ncde\n".getBytes(UTF_8))
+    date(dir, Old)
+    val probes = Seq("cab", long, "cde", "cdz")
+    for (pass <- Seq("cold", "warm")) {
+      val (found, shape) = shapeOf(probes.map(exists(spark, dir, ranges, _)))
+      assert(found === Seq(true, true, true, false) && shape.jobs === probes.size, pass)
+      agree(dir, probes, pass)
+    }
+  }
+
+  test("readRange skips or fails on a deleted file as the scan job does") {
+    val dir = SparkTestBase.tmpDir("wordlist_deleted")
+    writeBucketed(words, ranges, dir)
+    val file = probeSplits(spark, dir, ranges, "apple").head.files.head
+    // the scans list the file now and read it after it is gone; each
+    // takes the setting in force when its first action plans it
+    val Seq(skipping, failing) = Seq.fill(2)(spark.read.textFile(s"$dir/bucket=1"))
+    Files.delete(Paths.get(file.toPath.toUri))
+    val target = "apple".getBytes(UTF_8)
+    def read() = readRange(file, spark.sparkContext.hadoopConfiguration, IgnoreFiles(spark), target,
+      null, () => false)
+    val key = "spark.sql.files.ignoreMissingFiles"
+    try {
+      spark.conf.set(key, "true")
+      assert(skipping.collect().isEmpty)
+      assert(read() === RangeRead(found = false, complete = false, longest = 0))
+      spark.conf.set(key, "false")
+      val failed = intercept[Exception](failing.collect())
+      assert(Iterator.iterate[Throwable](failed)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[java.io.FileNotFoundException]), failed)
+      intercept[java.io.FileNotFoundException](read())
+    } finally spark.conf.unset(key)
   }
 
   test("a missing bucket fails like find does") {
@@ -288,17 +368,20 @@ class WordlistSearchSpec extends AnyFunSuite with SparkTestBase {
     assert(!missFound)
     assert(missShape === Shape(jobs = 1, stages = 1, plannedTasks = splits,
       endedTasks = splits, shuffleBytes = 0))
-    // a hit in the first split cancels its siblings and starts no further job
-    val (hitFound, hitShape) = shapeOf(exists(spark, dir, ranges, lines.head._1))
-    assert(hitFound)
-    assert((hitShape.jobs, hitShape.stages, hitShape.plannedTasks, hitShape.shuffleBytes) ===
-      ((1, 1, splits, 0L)))
-    // the first miss built the file's line filter, which now rules the miss out
+    // the first miss built the file's line filters, which now rule the
+    // miss out and point a hit at the one block the driver reads
     val (warmFound, warmShape) = shapeOf(exists(spark, dir, ranges, miss))
     assert(!warmFound && warmShape.jobs === 0)
+    val (warmHit, warmHitShape) = shapeOf(exists(spark, dir, ranges, lines.head._1))
+    assert(warmHit && warmHitShape.jobs === 0)
     // a file inside the freshness margin keeps no filter: every probe scans it
     val fresh = bigBase("wordlist_shape_fresh", Fresh)
     val freshSplits = probeSplits(spark, fresh, ranges, miss).size
+    // a hit in the first split cancels its siblings and starts no further job
+    val (hitFound, hitShape) = shapeOf(exists(spark, fresh, ranges, lines.head._1))
+    assert(hitFound)
+    assert((hitShape.jobs, hitShape.stages, hitShape.plannedTasks, hitShape.shuffleBytes) ===
+      ((1, 1, freshSplits, 0L)))
     for (_ <- 1 to 2) {
       val (freshFound, freshShape) = shapeOf(exists(spark, fresh, ranges, miss))
       assert(!freshFound)
@@ -349,6 +432,30 @@ class WordlistSearchSpec extends AnyFunSuite with SparkTestBase {
     Await.result(answers, Duration(5, TimeUnit.MINUTES)).flatten.foreach { case (p, got) =>
       assert(got === corpus.contains(p), s"probe=$p")
     }
+  }
+
+  test("line filters: a file too large for full-rate block filters is built lean, then probed with no job") {
+    // 28 MB in ~430 blocks: at 1% / blocks its filters could take ~78 MB,
+    // more than the 64 MiB memo holds; lean, at 1% a block, ~34 MB
+    val rnd = new Random(17)
+    val dir = SparkTestBase.tmpDir("wordlist_lean")
+    writeBucketed(Seq.empty, ranges, dir)
+    val out = new ByteArrayOutputStream()
+    val lines = IndexedSeq.fill(28000) {
+      val w = (('c' + rnd.nextInt(3)).toChar +: Seq.fill(998)(('a' + rnd.nextInt(26)).toChar)).mkString
+      out.write(s"$w\n".getBytes(UTF_8))
+      w
+    }
+    Files.write(Paths.get(dir, "bucket=2", "part-0.txt"), out.toByteArray)
+    date(dir, Old)
+    val miss = "c" + "z" * 11
+    val hits = Seq(lines.head, lines(lines.size / 2), lines.last)
+    assert(shapeOf(exists(spark, dir, ranges, miss))._2.jobs === 1)
+    (miss +: hits).foreach { p =>
+      val (found, shape) = shapeOf(exists(spark, dir, ranges, p))
+      assert(found === (p != miss) && shape.jobs === 0, s"probe=${p.take(8)}")
+    }
+    agree(dir, miss +: hits)
   }
 
   test("line filters: files past one call's build limit are scanned, then built by later calls") {
