@@ -1221,21 +1221,19 @@ object Engine {
       else graft.streaming.StreamingOps.vectorRetractBatch(
         spark, ivfStorePath, labelPath, cents, tau, nProbe) _
     val n = retract(removeIds)
-    codesStorePath.foreach { p =>
-      val ids = removeIds.select(org.apache.spark.sql.functions.col("vec_id"))
-      if (deferred) {
-        graft.sources.Maintenance.tombstoneAppend(spark, p, ids, "vec_id")
-        // the codes store has no ingest handler of its own running the
-        // zone-count trigger, so the takedown checks it inline exactly
-        // as vectorRetractDeferred does for the embedding store — a
-        // deployment taking only deferred takedowns must still have its
-        // read tax bounded (listing-only until the trigger fires)
-        graft.streaming.StreamingOps.compactIfDue(spark, p, "cell",
-          graft.streaming.StreamingOps.DefaultCompactMaxFiles)(
-          (src, dst) => graft.sources.Maintenance.compactPartitioned(
-            spark, src, dst, "cell"))
-      } else graft.sources.Maintenance.removeIvfRows(spark, p, ids)
-    }
+    // the codes store's half is the IVF store half of the takedown
+    // skeleton; deferred also runs its compaction trigger inline, as
+    // no ingest handler runs it for the codes store
+    codesStorePath.map(graft.streaming.StreamingOps.SignatureStore.ivf)
+      .foreach { codes =>
+        val rm = removeIds.select(
+          org.apache.spark.sql.functions.col("vec_id").as("doc_id"))
+        if (deferred) {
+          codes.tombstone(spark, rm)
+          codes.compact(spark,
+            graft.streaming.StreamingOps.DefaultCompactMaxFiles)
+        } else codes.remove(spark, rm)
+      }
     n
   }
 }

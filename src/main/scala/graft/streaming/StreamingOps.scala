@@ -328,10 +328,8 @@ object StreamingOps {
     val anchors = bf.filter(col("frame") === 0)
       .select(col("doc_id"), col("fhash"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sortBy(_._1)
-    val empty = bf.sparkSession.emptyDataFrame
-      .withColumn("doc_id", lit(0L)).withColumn("long_id", lit(0L))
-      .withColumn("offset", lit(0)).withColumn("max_hamming", lit(0))
-      .limit(0)
+    val empty = emptyFrame(bf.sparkSession, "doc_id" -> 0L, "long_id" -> 0L,
+      "offset" -> 0, "max_hamming" -> 0)
     if (anchors.isEmpty) return empty
     // candidate (arriving, stored, offset) triples from the banded probe
     val cand = Multimodal.frameProbeStored(spark, storePath, anchors, maxHamming)
@@ -795,9 +793,7 @@ object StreamingOps {
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
       .toSeq.sortBy(q => (q._1, q._2))
     if (sigs.isEmpty)
-      return spark.emptyDataFrame
-        .withColumn("doc_id", lit(0L)).withColumn("dup_of", lit(0L))
-        .limit(0)
+      return emptyFrame(spark, "doc_id" -> 0L, "dup_of" -> 0L)
     Dedup.lshProbeStored(spark, storePath, sigs)
       // the ingest contract says arriving ids are new; a violated
       // contract must not report a document as duplicating itself
@@ -860,10 +856,8 @@ object StreamingOps {
     // unbounded literal plan OR an unbounded broadcast).
     val nDocs = b.count()
     if (nDocs == 0)
-      return spark.emptyDataFrame
-        .withColumn("doc_id", lit(0L)).withColumn("dup_of", lit(0L))
-        .withColumn("jaccard", lit(0.0d))
-        .limit(0)
+      return emptyFrame(spark, "doc_id" -> 0L, "dup_of" -> 0L,
+        "jaccard" -> 0.0d)
     val bounded = nDocs * Dedup.DefaultLshBands.toLong <=
       Dedup.MaxProbeLiterals.toLong
     val cands = (if (bounded) {
@@ -874,10 +868,8 @@ object StreamingOps {
       // shorter than the shingle width) — the probe's non-empty
       // contract must not crash the stream
       if (sigs.isEmpty)
-        return spark.emptyDataFrame
-          .withColumn("doc_id", lit(0L)).withColumn("dup_of", lit(0L))
-          .withColumn("jaccard", lit(0.0d))
-          .limit(0)
+        return emptyFrame(spark, "doc_id" -> 0L, "dup_of" -> 0L,
+          "jaccard" -> 0.0d)
       Dedup.lshProbeStored(spark, storePath, sigs)
     } else {
       Dedup.lshProbeStoredDF(spark, storePath,
@@ -901,17 +893,13 @@ object StreamingOps {
     *
     *  1. gate — [[textDedupGateBatch]] probes the live LSH store for
     *     published near-dup candidates (returned for routing/policy);
-    *  2. fold — the gate verdicts plus the batch's within-batch LSH
-    *     candidate pairs update the live label store
-    *     (`LabelStore.update`: one union-find step on the affected
-    *     components), so `LabelStore.weightsFromStore` serves CURRENT
-    *     p118 sampling weights with no corpus rescan;
-    *  3. ingest + merge — the batch's signatures land exactly-once via
-    *     the staged [[lshIngestBatch]]/[[lshMergeStaged]] pair, so the
-    *     NEXT batch's gate sees this batch.
+    *  2. fold + ingest — [[maintainTail]]: the gate verdicts plus the
+    *     batch's within-batch LSH candidate pairs update the live label
+    *     store, so `LabelStore.weightsFromStore` serves CURRENT p118
+    *     sampling weights with no corpus rescan; the batch's
+    *     signatures land exactly-once in the store, so the NEXT batch's
+    *     gate sees this batch.
     *
-    * Batch ids must be new to the stores (the shared ingest contract)
-    * and handlers must run serially (one maintenance scheduler).
     * StreamingSpec drives it end-to-end to weight parity with the
     * from-scratch contraction of the union corpus.
     */
@@ -921,13 +909,9 @@ object StreamingOps {
                          compactMaxFiles: Int = DefaultCompactMaxFiles)(
                          batch: DataFrame, id: Long): DataFrame = {
     import graft.operators.Dedup
-    // a previous delivery's compaction may have died mid-swap — heal
-    // before the first store read (idempotent listing-only check)
     recoverStoreSwap(spark, lshStorePath)
     val b = batch.select(col("doc_id"), col("text")).localCheckpoint()
-    def noVerdicts: DataFrame = spark.emptyDataFrame
-      .withColumn("doc_id", lit(0L)).withColumn("dup_of", lit(0L))
-      .limit(0)
+    def noVerdicts = emptyFrame(spark, "doc_id" -> 0L, "dup_of" -> 0L)
     if (b.isEmpty) return noVerdicts
     // ONE execution of the scan→shingle→minhash pipeline per batch,
     // three consumers: the gate probe, the within-batch pairs, and the
@@ -947,37 +931,69 @@ object StreamingOps {
       .toSeq.sortBy(q => (q._1, q._2))
     val gate0 =
       if (sigs.isEmpty) noVerdicts
-      else if (sigs.size <= Dedup.MaxProbeLiterals)
-        Dedup.lshProbeStored(spark, lshStorePath, sigs)
-          .filter(col("doc_id") =!= col("qid"))
-          .select(col("qid").as("doc_id"), col("doc_id").as("dup_of"))
-          .distinct()
-      else
-        Dedup.lshProbeStoredDF(spark, lshStorePath, sigRows)
-          .filter(col("doc_id") =!= col("qid"))
-          .select(col("qid").as("doc_id"), col("doc_id").as("dup_of"))
-          .distinct()
+      else (if (sigs.size <= Dedup.MaxProbeLiterals)
+          Dedup.lshProbeStored(spark, lshStorePath, sigs)
+        else Dedup.lshProbeStoredDF(spark, lshStorePath, sigRows))
+        .filter(col("doc_id") =!= col("qid"))
+        .select(col("qid").as("doc_id"), col("doc_id").as("dup_of"))
+        .distinct()
     val gate = gate0.localCheckpoint() // feeds the fold AND the return
-    // at-least-once redelivery guard (the fold's OWN marker, written
-    // after LabelStore.update): a batch carrying it completed the fold
-    // once — re-folding would waste a label rewrite (LabelStore.update's
-    // own anti-join makes even that content-safe; this skips the cost).
-    // Note the replayed gate verdicts may include within-batch siblings
-    // (their signatures are merged by now) — the at-least-once verdict
-    // channel.
-    if (!batchFolded(spark, stagePath, id)) {
-      graft.operators.LabelStore.recoverAndUpdate(spark, labelPath,
-        b.select(col("doc_id")),
-        Dedup.lshPairsFromBands(banded).select(col("d1"), col("d2"))
-          .union(gate.select(col("doc_id").as("d1"), col("dup_of").as("d2"))))
-      markFolded(spark, stagePath, id)
-    }
-    idempotentParquetBatch(stagePath)(sigRows, id)
-    lshMergeStaged(spark, stagePath, lshStorePath)
-    compactIfDue(spark, lshStorePath, "band", compactMaxFiles)(
-      (src, dst) => Dedup.lshStoreCompact(spark, src, dst))
+    maintainTail(spark, labelPath, stagePath, id, compactMaxFiles, gate)(
+      b.select(col("doc_id")),
+      Dedup.lshPairsFromBands(banded).select(col("d1"), col("d2")))(
+      (stagePath, sigRows, SignatureStore.lsh(lshStorePath)))
     gate
   }
+
+  /** The ONE maintain tail behind every maintenance handler of the
+    * signature-store families (text, vector, video, audio,
+    * cross-modal). Each handler heals its stores, decodes the batch
+    * once, gates it against the live stores and builds its
+    * within-batch pairs; the tail then
+    *
+    *  1. folds — unless the batch's fold marker ([[batchFolded]]) says
+    *     a previous delivery already did: `LabelStore.recoverAndUpdate`
+    *     over the batch's ids (`ids`, one `doc_id` column) and the
+    *     within-batch pairs plus the gate's (id, dup_of) pairs, then
+    *     [[markFolded]]. Re-folding would only waste a label rewrite
+    *     (`LabelStore.update`'s own anti-join makes even that
+    *     content-safe). A replay's gate verdicts may include
+    *     within-batch siblings whose signatures are merged by now —
+    *     the at-least-once verdict channel;
+    *  2. per store, in order: lands the batch's rows exactly-once in
+    *     its stage ([[idempotentParquetBatch]]), folds every committed
+    *     staged batch into the store ([[mergeStagedPartitioned]] on the
+    *     store's partition column) and runs its [[compactIfDue]]
+    *     trigger.
+    *
+    * Shared contracts: batch ids must be new to the stores, and
+    * handlers run serially from one maintenance scheduler.
+    */
+  private def maintainTail(spark: SparkSession, labelPath: String,
+                           stagePath: String, id: Long,
+                           compactMaxFiles: Int, gate: DataFrame)(
+                           ids: => DataFrame, within: => DataFrame)(
+                           stores: (String, DataFrame, SignatureStore)*): Unit = {
+    if (!batchFolded(spark, stagePath, id)) {
+      graft.operators.LabelStore.recoverAndUpdate(spark, labelPath, ids,
+        within.union(gate.select(col(stores.head._3.idCol).as("d1"),
+          col("dup_of").as("d2"))))
+      markFolded(spark, stagePath, id)
+    }
+    stores.foreach { case (stage, rows, store) =>
+      idempotentParquetBatch(stage)(rows, id)
+      mergeStagedPartitioned(spark, stage, store.path, store.partCol)
+      store.compact(spark, compactMaxFiles)
+    }
+  }
+
+  /** A zero-row frame with the given columns (the handlers' empty
+    * verdicts).
+    */
+  private def emptyFrame(spark: SparkSession, cols: (String, Any)*): DataFrame =
+    cols.foldLeft(spark.emptyDataFrame) { case (df, (c, v)) =>
+      df.withColumn(c, lit(v))
+    }.limit(0)
 
   /** The maintenance handlers' FOLD-SPECIFIC redelivery marker,
     * `stagePath/_GRAFT_FOLDED_<id>`: created strictly AFTER
@@ -1142,87 +1158,161 @@ object StreamingOps {
     else false
   }
 
-  /** The composed TEXT RETRACTION handler — takedown/license-withdrawal
-    * compliance over the live text stores, the operation the grow-only
-    * maintenance family could not express: given the retracted ids,
-    *
-    *  1. heal-first (`recoverStoreSwap` — a previous retraction's
-    *     crashed store swap must not wedge this one);
-    *  2. derive the surviving evidence FROM the signature store,
-    *     COMPONENT-BOUNDED
-    *     ([[graft.operators.Dedup.lshPairsFromStoreAmong]] over the
-    *     affected components' surviving members — computed BEFORE the
-    *     signatures leave, so affected components recontract from the
-    *     same relation the folds consumed; the full-store
-    *     `lshPairsFromStore` remains the always-safe form for direct
-    *     `LabelStore.remove` callers, but scales with the store
-    *     where this scales with the takedown's components —
-    *     TakedownProbe measured the difference);
-    *  3. `LabelStore.remove` — drop the retracted rows, recontract the
-    *     affected components (splits included), delete emptied buckets;
-    *  4. remove the retracted ids' signature rows from the store
-    *     ([[graft.sources.Maintenance.removePartitionedRows]], the
-    *     checked-swap rewrite).
-    *
-    * Step 4 is NOT optional hygiene: with signatures left behind, a
-    * later arrival matching the withdrawn content gates against the
-    * retracted id, and the label fold — finding no stored label for it
-    * — would treat it as a NEW document and silently resurrect it as a
-    * cluster member (StreamingSpec pins the hazard and its absence).
-    *
-    * CRASH-IDEMPOTENT by construction: each half is gated on its OWN
-    * store's state, not on the other's — a crash between the label
-    * removal and the signature removal re-runs as a labels-no-op that
-    * still removes the signatures (gating both on the label count
-    * would make the retry a silent no-op and leave the withdrawn
-    * signatures live forever), and the heal-first step covers BOTH
-    * stores' crash windows (the LSH swap AND a label-store stage a
-    * previous removal left mid-flight). Retractions serialize with
-    * folds through the one maintenance scheduler, like every store
-    * mutation here. Returns the number of label rows actually
-    * retracted (0 on a pure retry/no-op).
-    *
-    * NO ADMISSION GUARD is owed by this family (unlike
-    * [[lexicalRetractBatch]], whose `_stats` decrement is numeric): an
-    * overlapping batch admitted inside the labels→store crash window
-    * counts only the rows the labels still own and its store half is
-    * set-semantics — OverlapAdmissionSpec pins convergence for every
-    * label-half family across all eager/deferred form pairs.
+  /** One signature store's STORE-HALF facts — what the shared
+    * lifecycle ([[retract]], [[maintainTail]]) needs to know about it:
+    * its path, the id column its rows and tombstone zone key on, the
+    * partition column its merges append by and its compaction trigger
+    * counts, how an eager takedown removes rows (`sortCol` defined: the
+    * presence-probed full rewrite of a banded store; `None`: the
+    * cell-pruned IVF rewrite), and the compactor its trigger runs.
+    * Three kinds cover every store here: [[SignatureStore.lsh]],
+    * [[SignatureStore.frames]] and [[SignatureStore.ivf]].
     */
-  def dedupRetractBatch(spark: org.apache.spark.sql.SparkSession,
-                        lshStorePath: String, labelPath: String)(
-                        removeIds: DataFrame): Long = {
-    recoverStoreSwap(spark, lshStorePath)
-    graft.operators.LabelStore.recover(spark, labelPath)
-    val rm = removeIds.select(col("doc_id")).distinct().localCheckpoint()
-    val before = textRetractLabels(spark, lshStorePath, labelPath, rm)
-    graft.CrashPoints.hit("dedupRetract.labels")
-    // gated on the SIGNATURE store's own state: present after a crash
-    // between the halves even when the label rows are already gone
-    val sigsPresent = !spark.read.parquet(lshStorePath)
-      .join(broadcast(rm), Seq("doc_id"), "left_semi").isEmpty
-    if (sigsPresent)
-      graft.sources.Maintenance.removePartitionedRows(
-        spark, lshStorePath, rm, "doc_id", "band", "sig_h")
-    before
+  private[graft] final case class SignatureStore(
+      path: String, idCol: String, partCol: String, sortCol: Option[String],
+      compactor: (SparkSession, String, String) => Unit) {
+
+    private def ids(rm: DataFrame) = rm.select(col("doc_id").as(idCol))
+
+    /** Eager store half over `rm` (one `doc_id` column). A banded
+      * store's removal rewrites the whole store, so it runs only when
+      * the store still holds a retracted row — a retry after the rows
+      * left costs one probe, not a rewrite. The IVF removal rewrites
+      * only the cells holding a retracted row, so it needs no probe.
+      */
+    def remove(spark: SparkSession, rm: DataFrame): Unit = sortCol match {
+      case Some(sc) =>
+        val present = !spark.read.parquet(path)
+          .join(broadcast(ids(rm)), Seq(idCol), "left_semi").isEmpty
+        if (present)
+          graft.sources.Maintenance.removePartitionedRows(
+            spark, path, ids(rm), idCol, partCol, sc)
+      case None =>
+        graft.sources.Maintenance.removeIvfRows(spark, path, ids(rm), idCol)
+    }
+
+    /** Deferred store half: queue `rm`'s ids in the tombstone zone. */
+    def tombstone(spark: SparkSession, rm: DataFrame): Unit =
+      graft.sources.Maintenance.tombstoneAppend(spark, path, ids(rm), idCol)
+
+    /** The store's [[compactIfDue]] trigger with its own compactor. */
+    def compact(spark: SparkSession, maxFiles: Int,
+                maxTombstoneFiles: Int = 16): Boolean =
+      compactIfDue(spark, path, partCol, maxFiles, maxTombstoneFiles)(
+        compactor(spark, _, _))
   }
 
-  /** The label half of the text takedown, shared by the eager and
-    * deferred handlers: evidence is the store's pair relation AMONG
-    * the affected components' surviving members
-    * ([[graft.operators.Dedup.lshPairsFromStoreAmong]] — the
-    * component-bounded derivation; the full-store
-    * `lshPairsFromStore` remains the documented always-safe form for
-    * direct `LabelStore.remove` callers, and `remove`'s own
-    * survivor filter makes the two land identically). The member set
-    * comes from the label table, which already excludes every
-    * previously retracted id — eager or deferred — so pending
-    * tombstones cannot leak back in as evidence.
+  private[graft] object SignatureStore {
+    /** The text LSH store ([[graft.operators.Dedup.lshStoreWrite]]). */
+    def lsh(path: String): SignatureStore =
+      SignatureStore(path, "doc_id", "band", Some("sig_h"),
+        graft.operators.Dedup.lshStoreCompact(_, _, _))
+
+    /** A banded frame store ([[graft.operators.Multimodal.frameStoreWrite]]):
+      * clips, text clips, image hashes and audio fingerprints.
+      */
+    def frames(path: String): SignatureStore =
+      SignatureStore(path, "doc_id", "band_i", Some("band_v"),
+        graft.operators.Multimodal.frameStoreCompact(_, _, _))
+
+    /** An IVF cell layout ([[graft.operators.Similarity.ivfWrite]] or
+      * the PQ codes store): no within-file sort to restore, so the plain
+      * partition compactor.
+      */
+    def ivf(path: String): SignatureStore =
+      SignatureStore(path, "vec_id", "cell", None,
+        graft.sources.Maintenance.compactPartitioned(_, _, _, "cell"))
+  }
+
+  /** How a takedown's store half runs: rewrite now, or queue in the
+    * tombstone zone and leave the rewrite to the compaction trigger.
     */
-  private def textRetractLabels(spark: org.apache.spark.sql.SparkSession,
-                                lshStorePath: String, labelPath: String,
-                                rm: DataFrame): Long = {
-    import graft.operators.{Dedup, LabelStore}
+  private[graft] sealed trait RetractMode
+  private[graft] case object Eager extends RetractMode
+  private[graft] final case class Deferred(compactMaxFiles: Int,
+                                           maxTombstoneFiles: Int)
+    extends RetractMode
+
+  /** The ONE takedown skeleton behind every retraction handler of the
+    * signature-store families (text, vector, video, audio, cross-modal)
+    * — takedown/license-withdrawal compliance over one label store and
+    * the signature stores its folds read:
+    *
+    *  1. heal first — `recoverStoreSwap` on every store, then
+    *     `LabelStore.recover`, so a previous call's crashed store swap
+    *     or half-staged label removal cannot wedge this one;
+    *  2. checkpoint the distinct retracted ids (the store's id column,
+    *     renamed `doc_id`);
+    *  3. the label half — drop the retracted rows and recontract the
+    *     affected components from `evidence(survivors)`: the family's
+    *     relation among the affected components' SURVIVING members,
+    *     rebuilt from the family's own stores (no corpus access, no
+    *     re-decode). The member set comes from the label table, which
+    *     already excludes every previously retracted id — eager or
+    *     deferred — so pending tombstones cannot leak back in as
+    *     evidence. Returns the label rows retracted (0 on a retry);
+    *  4. the store half — [[Eager]]: remove the rows from each store
+    *     ([[SignatureStore.remove]]); [[Deferred]]: queue the ids in
+    *     each store's tombstone zone, then run each store's
+    *     [[compactIfDue]].
+    *
+    * The store half is NOT optional hygiene: signatures left behind
+    * keep gate-matching the withdrawn content, and the label fold —
+    * finding no label for the retracted id — would resurrect it as a
+    * new cluster member (StreamingSpec pins the hazard).
+    *
+    * CRASH-IDEMPOTENT by construction: each half is gated on its OWN
+    * store's state — the labels on the label table's retracted-row
+    * count, an eager removal on the store still holding the rows, the
+    * zone append on the ids not yet queued — never on the other half's.
+    * A crash between the halves re-runs as a labels no-op that still
+    * completes the store half (gating both on the label count would
+    * make that retry a silent no-op and leave the signatures live).
+    * Crash points: `<name>.labels` after the label half, where `name`
+    * is the handler's family name plus `Deferred` for the deferred
+    * form; a label space with more than one store (cross-modal) adds
+    * `<name>.store` after each eager removal and `<name>.zone` after
+    * each zone append. The durable steps inside the store devices
+    * carry their own points (`removePartitionedRows.staged`,
+    * `removePrunedRows.overwrite`, `swapInCompacted.mid`).
+    *
+    * Eager vs deferred: an eager banded removal is a FULL store rewrite
+    * (band values are content-derived, so every partition holds a
+    * retracted document's rows — TakedownProbe measures the linear
+    * term), the IVF one a rewrite of the affected cells. Deferred makes
+    * the takedown O(batch): every store reader is tombstone-aware, so
+    * withdrawn content stops matching IMMEDIATELY, and the compaction
+    * drops the rows and retires the zone with the old copy. Until then
+    * each read pays a broadcast anti-join against the pending set and
+    * the rows still occupy disk. Choose eager when takedowns are rare
+    * and large, deferred when they are frequent and compaction already
+    * runs. Deferred runs [[compactIfDue]] INLINE because a store that
+    * only ever takes deferred takedowns has no maintenance handler
+    * running the trigger for it: without the check the zone — and every
+    * reader's anti-join tax — would grow without bound. The check is
+    * listing-only until `maxTombstoneFiles` queued batches (or a
+    * partition's slivers) make it due; 0 disables it.
+    *
+    * NO ADMISSION GUARD is owed (unlike [[lexicalRetractBatch]], whose
+    * `_stats` decrement is numeric): an overlapping batch admitted
+    * inside the labels→store window counts only the rows the labels
+    * still own, and the store half is set-semantics —
+    * OverlapAdmissionSpec pins convergence for every family across the
+    * eager/deferred form pairs. Retractions serialize with folds
+    * through the one maintenance scheduler.
+    */
+  private def retract(spark: SparkSession, family: String,
+                      stores: Seq[SignatureStore], labelPath: String,
+                      mode: RetractMode, evidence: DataFrame => DataFrame,
+                      removeIds: DataFrame): Long = {
+    import graft.operators.LabelStore
+    val name = if (mode == Eager) family else s"${family}Deferred"
+    def perStore(step: String): Unit =
+      if (stores.size > 1) graft.CrashPoints.hit(s"$name.$step")
+    stores.foreach(s => recoverStoreSwap(spark, s.path))
+    LabelStore.recover(spark, labelPath)
+    val rm = removeIds.select(col(stores.head.idCol).as("doc_id")).distinct()
+      .localCheckpoint()
     val labels0 = LabelStore.read(spark, labelPath)
       .localCheckpoint(eager = false)
     val before = labels0.join(rm, Seq("doc_id")).count()
@@ -1231,475 +1321,212 @@ object StreamingOps {
         .select(col("canonical")).distinct()
       val survIds = labels0.join(broadcast(affC), Seq("canonical"))
         .select(col("doc_id")).join(rm, Seq("doc_id"), "left_anti")
-      LabelStore.remove(spark, labelPath, rm,
-        Dedup.lshPairsFromStoreAmong(spark, lshStorePath, survIds))
+      LabelStore.remove(spark, labelPath, rm, evidence(survIds))
+    }
+    graft.CrashPoints.hit(s"$name.labels")
+    mode match {
+      case Eager =>
+        stores.foreach { s => s.remove(spark, rm); perStore("store") }
+      case Deferred(maxFiles, maxTombstoneFiles) =>
+        stores.foreach { s => s.tombstone(spark, rm); perStore("zone") }
+        stores.foreach(_.compact(spark, maxFiles, maxTombstoneFiles))
     }
     before
   }
 
-  /** The DEFERRED text retraction — [[dedupRetractBatch]] with the
-    * store half tombstoned instead of rewritten: the eager handler's
-    * signature removal is a FULL store rewrite (band values are
-    * content-derived — TakedownProbe measures the linear term, hours
-    * per batch at deployment scale), so this variant makes the
-    * takedown itself O(batch): the label half runs identically (the
-    * affected components recontract NOW — labels must never serve
-    * withdrawn rows), then the retracted ids land in the store's
-    * tombstone zone ([[graft.sources.Maintenance.tombstoneAppend]]).
-    * Every store reader is tombstone-aware (probes, pair derivations
-    * — `Dedup.lshStoreScan`), so withdrawn content stops gate-matching
-    * IMMEDIATELY; the physical rewrite rides the next scheduled
-    * compaction for free (`lshStoreCompact`/`compactIfDue` drop the
-    * rows and the swap retires the zone with the old copy).
-    *
-    * Same crash discipline as the eager twin: heal-first, each half
-    * gated on its own state (the tombstone append skips ids already
-    * queued), replay converges. The trade, stated: until the next
-    * compaction every store read pays a broadcast anti-join against
-    * the pending set (bounded by takedowns-since-last-compaction),
-    * and the withdrawn rows still occupy disk. Choose eager when
-    * takedown batches are rare and large, deferred when they are
-    * frequent and the compaction cadence already runs.
+  /** The TEXT takedown ([[retract]] over the LSH store): evidence is
+    * the store's pair relation among the surviving members
+    * ([[graft.operators.Dedup.lshPairsFromStoreAmong]], computed
+    * before the signatures leave, so affected components recontract
+    * from the relation the folds consumed; the full-store
+    * `lshPairsFromStore` stays the always-safe form for direct
+    * `LabelStore.remove` callers, and `remove`'s survivor filter makes
+    * the two land identically). Eager removal rewrites the store.
     */
-  /** `compactMaxFiles`/`maxTombstoneFiles` wire the shared compaction
-    * trigger ([[compactIfDue]]) into the takedown itself: a store that
-    * only ever takes deferred takedowns has no ingest handler running
-    * the trigger for it, so without this the zone files — and with
-    * them every reader's broadcast anti-join tax — would accumulate
-    * unboundedly until some unrelated maintenance call happened by.
-    * Past `maxTombstoneFiles` queued batches the handler pays the
-    * applying compaction inline (the lexical deferred twin's
-    * discipline); 0 disables.
-    */
+  def dedupRetractBatch(spark: org.apache.spark.sql.SparkSession,
+                        lshStorePath: String, labelPath: String)(
+                        removeIds: DataFrame): Long =
+    retract(spark, "dedupRetract", Seq(SignatureStore.lsh(lshStorePath)),
+      labelPath, Eager, textEvidence(spark, lshStorePath), removeIds)
+
+  /** [[dedupRetractBatch]] with the store half tombstoned. */
   def dedupRetractDeferred(spark: org.apache.spark.sql.SparkSession,
                            lshStorePath: String, labelPath: String,
                            compactMaxFiles: Int = DefaultCompactMaxFiles,
                            maxTombstoneFiles: Int = 16)(
-                           removeIds: DataFrame): Long = {
-    recoverStoreSwap(spark, lshStorePath)
-    graft.operators.LabelStore.recover(spark, labelPath)
-    val rm = removeIds.select(col("doc_id")).distinct().localCheckpoint()
-    val before = textRetractLabels(spark, lshStorePath, labelPath, rm)
-    graft.CrashPoints.hit("dedupRetractDeferred.labels")
-    graft.sources.Maintenance.tombstoneAppend(spark, lshStorePath,
-      rm, "doc_id")
-    compactIfDue(spark, lshStorePath, "band", compactMaxFiles,
-      maxTombstoneFiles)(
-      (src, dst) => graft.operators.Dedup.lshStoreCompact(spark, src, dst))
-    before
-  }
+                           removeIds: DataFrame): Long =
+    retract(spark, "dedupRetract", Seq(SignatureStore.lsh(lshStorePath)),
+      labelPath, Deferred(compactMaxFiles, maxTombstoneFiles),
+      textEvidence(spark, lshStorePath), removeIds)
 
-  /** The CROSS-MODAL RETRACTION handler — takedown over the UNIFIED
-    * label space ([[multimodalMaintainBatch]]'s stores): the
-    * retraction evidence is the union of all four modalities'
-    * relations, each reconstructed from ITS store's own rows over the
-    * affected components' surviving members (text: the 2-frame
-    * (th, th2) clips pivot back to the signature pair and re-derive
-    * the star edges; image/audio: the banded Hamming relation over
-    * the one-frame rows; video: the equal-length aligned relation
-    * over reconstructed frame tables) — no modality ever re-decodes.
-    * The retracted ids' signature rows then leave ALL FOUR stores;
-    * every half gates on its own store's state (crash-idempotent, the
-    * [[dedupRetractBatch]] discipline) and the heal-first step covers
-    * all five crash windows. Returns the label rows retracted.
+  private def textEvidence(spark: SparkSession, lshStorePath: String)(
+      survIds: DataFrame): DataFrame =
+    graft.operators.Dedup.lshPairsFromStoreAmong(spark, lshStorePath, survIds)
+
+  /** The CROSS-MODAL takedown over the unified label space
+    * ([[multimodalMaintainBatch]]'s four frame stores): evidence is the
+    * union of the four modalities' relations, each rebuilt from its own
+    * store ([[textClipEvidence]], [[perceptualEvidence]] for image and
+    * audio, [[videoEvidence]]); the survivors are checkpointed once for
+    * the four. The retracted ids leave all four stores.
     */
   def multimodalRetractBatch(spark: org.apache.spark.sql.SparkSession,
                              txtStorePath: String, imgStorePath: String,
                              audStorePath: String, vidStorePath: String,
                              labelPath: String, maxHamming: Int = 3)(
-                             removeIds: DataFrame): Long = {
-    import graft.operators.LabelStore
-    val stores = Seq(txtStorePath, imgStorePath, audStorePath, vidStorePath)
-    stores.foreach(recoverStoreSwap(spark, _))
-    LabelStore.recover(spark, labelPath)
-    val rm = removeIds.select(col("doc_id")).distinct().localCheckpoint()
-    val before = multimodalRetractLabels(spark, txtStorePath, imgStorePath,
-      audStorePath, vidStorePath, labelPath, maxHamming, rm)
-    graft.CrashPoints.hit("multimodalRetract.labels")
-    stores.foreach { store =>
-      val present = !spark.read.parquet(store)
-        .join(broadcast(rm), Seq("doc_id"), "left_semi").isEmpty
-      if (present)
-        graft.sources.Maintenance.removePartitionedRows(
-          spark, store, rm, "doc_id", "band_i", "band_v")
-      graft.CrashPoints.hit("multimodalRetract.store")
-    }
-    before
-  }
+                             removeIds: DataFrame): Long =
+    retract(spark, "multimodalRetract",
+      Seq(txtStorePath, imgStorePath, audStorePath, vidStorePath)
+        .map(SignatureStore.frames), labelPath, Eager,
+      multimodalEvidence(spark, txtStorePath, imgStorePath, audStorePath,
+        vidStorePath, maxHamming), removeIds)
 
-  /** [[multimodalRetractBatch]] with all FOUR store halves TOMBSTONED —
-    * the deferred takedown on the unified label space: one label
-    * recontraction now, four O(batch) zone appends, four physical
-    * rewrites left to each store's own compaction cadence.
-    */
+  /** [[multimodalRetractBatch]] with all four store halves tombstoned. */
   def multimodalRetractDeferred(spark: org.apache.spark.sql.SparkSession,
                                 txtStorePath: String, imgStorePath: String,
                                 audStorePath: String, vidStorePath: String,
                                 labelPath: String, maxHamming: Int = 3,
                                 compactMaxFiles: Int = DefaultCompactMaxFiles,
                                 maxTombstoneFiles: Int = 16)(
-                                removeIds: DataFrame): Long = {
-    import graft.operators.LabelStore
-    val stores = Seq(txtStorePath, imgStorePath, audStorePath, vidStorePath)
-    stores.foreach(recoverStoreSwap(spark, _))
-    LabelStore.recover(spark, labelPath)
-    val rm = removeIds.select(col("doc_id")).distinct().localCheckpoint()
-    val before = multimodalRetractLabels(spark, txtStorePath, imgStorePath,
-      audStorePath, vidStorePath, labelPath, maxHamming, rm)
-    graft.CrashPoints.hit("multimodalRetractDeferred.labels")
-    stores.foreach { store =>
-      graft.sources.Maintenance.tombstoneAppend(spark, store, rm, "doc_id")
-      graft.CrashPoints.hit("multimodalRetractDeferred.zone")
-    }
-    // the dedupRetractDeferred rationale, per store: a label space fed
-    // only by takedowns has no ingest handler running the trigger
-    stores.foreach { store =>
-      compactIfDue(spark, store, "band_i", compactMaxFiles,
-        maxTombstoneFiles)(
-        (src, dst) =>
-          graft.operators.Multimodal.frameStoreCompact(spark, src, dst))
-    }
-    before
+                                removeIds: DataFrame): Long =
+    retract(spark, "multimodalRetract",
+      Seq(txtStorePath, imgStorePath, audStorePath, vidStorePath)
+        .map(SignatureStore.frames), labelPath,
+      Deferred(compactMaxFiles, maxTombstoneFiles),
+      multimodalEvidence(spark, txtStorePath, imgStorePath, audStorePath,
+        vidStorePath, maxHamming), removeIds)
+
+  private def multimodalEvidence(spark: SparkSession, txtStorePath: String,
+                                 imgStorePath: String, audStorePath: String,
+                                 vidStorePath: String, maxHamming: Int)(
+                                 survIds: DataFrame): DataFrame = {
+    val surv = survIds.localCheckpoint(eager = false) // four consumers
+    textClipEvidence(spark, txtStorePath)(surv)
+      .union(perceptualEvidence(spark, imgStorePath, maxHamming)(surv))
+      .union(perceptualEvidence(spark, audStorePath, maxHamming)(surv))
+      .union(videoEvidence(spark, vidStorePath, maxHamming)(surv))
   }
 
-  /** The label half of the unified takedown — shared by the eager and
-    * deferred handlers; the surviving-member semi-join excludes every
-    * previously retracted id ([[videoRetractLabels]]' rationale).
+  /** Surviving members' rows from ONE band partition of a banded frame
+    * store — every frame of every stored document, read once.
     */
-  private def multimodalRetractLabels(
-      spark: org.apache.spark.sql.SparkSession,
-      txtStorePath: String, imgStorePath: String, audStorePath: String,
-      vidStorePath: String, labelPath: String, maxHamming: Int,
-      rm: DataFrame): Long = {
-    import graft.operators.{LabelStore, Multimodal, Pipeline9}
-    val labels0 = LabelStore.read(spark, labelPath)
-      .localCheckpoint(eager = false)
-    val before = labels0.join(rm, Seq("doc_id")).count()
-    if (before > 0) {
-      val affC = labels0.join(rm, Seq("doc_id"))
-        .select(col("canonical")).distinct()
-      val survIds = labels0.join(broadcast(affC), Seq("canonical"))
-        .select(col("doc_id")).join(rm, Seq("doc_id"), "left_anti")
-        .localCheckpoint(eager = false) // four consumers below
-      def bandRows(path: String) = spark.read.parquet(path)
-        .filter(col("band_i") === 0)
-        .select(col("doc_id"), col("frame"), col("fhash"))
-        .join(broadcast(survIds), Seq("doc_id"), "left_semi")
-      val eT = Pipeline9.exactPairsOfSig(
-        bandRows(txtStorePath).groupBy(col("doc_id")).agg(
-          max(when(col("frame") === 0, col("fhash"))).as("th"),
-          max(when(col("frame") === 1, col("fhash"))).as("th2")))
-      val eI = Multimodal.perceptualNearDupPairs(
-          bandRows(imgStorePath)
-            .select(col("doc_id"), col("fhash").as("dhash")), maxHamming)
-        .select(col("d1"), col("d2"))
-      val eA = Multimodal.perceptualNearDupPairs(
-          bandRows(audStorePath)
-            .select(col("doc_id"), col("fhash").as("dhash")), maxHamming)
-        .select(col("d1"), col("d2"))
-      val vf0 = bandRows(vidStorePath).localCheckpoint(eager = false)
-      val nfr = vf0.groupBy(col("doc_id"))
-        .agg((max(col("frame")) + 1).cast("int").as("n_frames"))
-      val eV = Multimodal.videoNearDupPairs(
-          vf0.join(nfr, Seq("doc_id")), maxHamming)
-        .select(col("d1"), col("d2"))
-      LabelStore.remove(spark, labelPath, rm,
-        eT.union(eI).union(eA).union(eV))
-    }
-    before
+  private def band0Rows(spark: SparkSession, path: String,
+                        survIds: DataFrame): DataFrame =
+    spark.read.parquet(path)
+      .filter(col("band_i") === 0)
+      .select(col("doc_id"), col("frame"), col("fhash"))
+      .join(broadcast(survIds), Seq("doc_id"), "left_semi")
+
+  /** Exact-text evidence from a text-clip store: the 2-frame (th, th2)
+    * clips pivot back to the signature pair, then p85's star edges.
+    */
+  private def textClipEvidence(spark: SparkSession, path: String)(
+      survIds: DataFrame): DataFrame =
+    graft.operators.Pipeline9.exactPairsOfSig(
+      band0Rows(spark, path, survIds).groupBy(col("doc_id")).agg(
+        max(when(col("frame") === 0, col("fhash"))).as("th"),
+        max(when(col("frame") === 1, col("fhash"))).as("th2")))
+
+  /** Image/audio evidence: a one-frame row's hash IS its signature, so
+    * p79's banded Hamming relation over the survivors' hashes.
+    */
+  private def perceptualEvidence(spark: SparkSession, path: String,
+                                 maxHamming: Int)(survIds: DataFrame): DataFrame =
+    perceptualPairs(band0Rows(spark, path, survIds), "fhash", maxHamming)
+
+  /** Video evidence: p90's equal-length aligned relation over the
+    * survivors' frames, clip length as `max(frame) + 1`.
+    */
+  private def videoEvidence(spark: SparkSession, path: String,
+                            maxHamming: Int)(survIds: DataFrame): DataFrame = {
+    val frames = band0Rows(spark, path, survIds)
+      .localCheckpoint(eager = false) // feeds the length AND the pairs
+    val nfr = frames.groupBy(col("doc_id"))
+      .agg((max(col("frame")) + 1).cast("int").as("n_frames"))
+    videoPairs(frames.join(nfr, Seq("doc_id")), maxHamming)
   }
 
-  /** The VIDEO RETRACTION handler — the takedown twin over the clip
-    * stores: retraction evidence reconstructs from the frame store's
-    * OWN rows (surviving members' frames from ONE band partition, clip
-    * length as `max(frame)+1` — the live-yield geometry device — and
-    * p90's equal-length aligned relation recomputed over that
-    * component-bounded slice; no corpus decode), then the banded
-    * signature rows leave via the full-rewrite removal (band values
-    * are content-derived, so every partition holds a retracted clip's
-    * rows — the text-store shape, not the IVF cell prune).
-    * Crash-idempotent and heal-first exactly as [[dedupRetractBatch]].
-    */
+  /** The VIDEO takedown over a banded clip store: [[videoEvidence]]. */
   def videoRetractBatch(spark: org.apache.spark.sql.SparkSession,
                         frameStorePath: String, labelPath: String,
-                        maxHamming: Int = 3)(removeIds: DataFrame): Long = {
-    recoverStoreSwap(spark, frameStorePath)
-    graft.operators.LabelStore.recover(spark, labelPath)
-    val rm = removeIds.select(col("doc_id")).distinct().localCheckpoint()
-    val before = videoRetractLabels(spark, frameStorePath, labelPath,
-      maxHamming, rm)
-    graft.CrashPoints.hit("videoRetract.labels")
-    val sigsPresent = !spark.read.parquet(frameStorePath)
-      .join(broadcast(rm), Seq("doc_id"), "left_semi").isEmpty
-    if (sigsPresent)
-      graft.sources.Maintenance.removePartitionedRows(
-        spark, frameStorePath, rm, "doc_id", "band_i", "band_v")
-    before
-  }
+                        maxHamming: Int = 3)(removeIds: DataFrame): Long =
+    retract(spark, "videoRetract", Seq(SignatureStore.frames(frameStorePath)),
+      labelPath, Eager, videoEvidence(spark, frameStorePath, maxHamming),
+      removeIds)
 
-  /** The label half of the video takedown, shared verbatim by the
-    * eager and deferred handlers. Evidence reconstruction reads the
-    * store raw but semi-joins the surviving members FROM THE LABEL
-    * TABLE, which already excludes every previously retracted id
-    * (eager or deferred) — so pending tombstones cannot leak back in
-    * as evidence.
-    */
-  private def videoRetractLabels(spark: org.apache.spark.sql.SparkSession,
-                                 frameStorePath: String, labelPath: String,
-                                 maxHamming: Int, rm: DataFrame): Long = {
-    import graft.operators.{LabelStore, Multimodal}
-    val labels0 = LabelStore.read(spark, labelPath)
-      .localCheckpoint(eager = false)
-    val before = labels0.join(rm, Seq("doc_id")).count()
-    if (before > 0) {
-      val affC = labels0.join(rm, Seq("doc_id"))
-        .select(col("canonical")).distinct()
-      val survIds = labels0.join(broadcast(affC), Seq("canonical"))
-        .select(col("doc_id")).join(rm, Seq("doc_id"), "left_anti")
-      val frames0 = spark.read.parquet(frameStorePath)
-        .filter(col("band_i") === 0)
-        .select(col("doc_id"), col("frame"), col("fhash"))
-        .join(broadcast(survIds), Seq("doc_id"), "left_semi")
-        .localCheckpoint(eager = false) // feeds the length AND the pairs
-      val nfr = frames0.groupBy(col("doc_id"))
-        .agg((max(col("frame")) + 1).cast("int").as("n_frames"))
-      LabelStore.remove(spark, labelPath, rm,
-        Multimodal.videoNearDupPairs(
-            frames0.join(nfr, Seq("doc_id")), maxHamming)
-          .select(col("d1"), col("d2")))
-    }
-    before
-  }
-
-  /** [[videoRetractBatch]] with the store half TOMBSTONED instead of
-    * rewritten — the [[dedupRetractDeferred]] discipline on the clip
-    * stores: labels recontract now, the frame store's rewrite rides
-    * the next compaction, the gate stops matching immediately because
-    * every frame-store reader is tombstone-aware.
-    */
+  /** [[videoRetractBatch]] with the store half tombstoned. */
   def videoRetractDeferred(spark: org.apache.spark.sql.SparkSession,
                            frameStorePath: String, labelPath: String,
                            maxHamming: Int = 3,
                            compactMaxFiles: Int = DefaultCompactMaxFiles,
                            maxTombstoneFiles: Int = 16)(
-                           removeIds: DataFrame): Long = {
-    recoverStoreSwap(spark, frameStorePath)
-    graft.operators.LabelStore.recover(spark, labelPath)
-    val rm = removeIds.select(col("doc_id")).distinct().localCheckpoint()
-    val before = videoRetractLabels(spark, frameStorePath, labelPath,
-      maxHamming, rm)
-    graft.CrashPoints.hit("videoRetractDeferred.labels")
-    graft.sources.Maintenance.tombstoneAppend(spark, frameStorePath,
-      rm, "doc_id")
-    // takedown-only stores have no ingest handler running the trigger
-    // (the dedupRetractDeferred rationale)
-    compactIfDue(spark, frameStorePath, "band_i", compactMaxFiles,
-      maxTombstoneFiles)(
-      (src, dst) =>
-        graft.operators.Multimodal.frameStoreCompact(spark, src, dst))
-    before
-  }
+                           removeIds: DataFrame): Long =
+    retract(spark, "videoRetract", Seq(SignatureStore.frames(frameStorePath)),
+      labelPath, Deferred(compactMaxFiles, maxTombstoneFiles),
+      videoEvidence(spark, frameStorePath, maxHamming), removeIds)
 
-  /** The AUDIO RETRACTION handler — the fourth member completing the
-    * takedown matrix (text, vector, video, audio): a track's 60-bit
-    * fingerprint IS its one-frame signature, so the surviving
-    * members' fingerprints read straight off one band partition and
-    * the evidence is p79's banded relation over that bounded slice.
-    * Same store-half rewrite and crash discipline as the video twin.
+  /** The AUDIO takedown over the banded track-fingerprint store (one
+    * frame per track): [[perceptualEvidence]].
     */
   def audioRetractBatch(spark: org.apache.spark.sql.SparkSession,
                         fpStorePath: String, labelPath: String,
-                        maxHamming: Int = 3)(removeIds: DataFrame): Long = {
-    recoverStoreSwap(spark, fpStorePath)
-    graft.operators.LabelStore.recover(spark, labelPath)
-    val rm = removeIds.select(col("doc_id")).distinct().localCheckpoint()
-    val before = audioRetractLabels(spark, fpStorePath, labelPath,
-      maxHamming, rm)
-    graft.CrashPoints.hit("audioRetract.labels")
-    val sigsPresent = !spark.read.parquet(fpStorePath)
-      .join(broadcast(rm), Seq("doc_id"), "left_semi").isEmpty
-    if (sigsPresent)
-      graft.sources.Maintenance.removePartitionedRows(
-        spark, fpStorePath, rm, "doc_id", "band_i", "band_v")
-    before
-  }
+                        maxHamming: Int = 3)(removeIds: DataFrame): Long =
+    retract(spark, "audioRetract", Seq(SignatureStore.frames(fpStorePath)),
+      labelPath, Eager, perceptualEvidence(spark, fpStorePath, maxHamming),
+      removeIds)
 
-  /** The label half of the audio takedown — shared by the eager and
-    * deferred handlers ([[videoRetractLabels]]' rationale: the label
-    * table's surviving-member semi-join already excludes every
-    * previously retracted id, pending tombstones included).
-    */
-  private def audioRetractLabels(spark: org.apache.spark.sql.SparkSession,
-                                 fpStorePath: String, labelPath: String,
-                                 maxHamming: Int, rm: DataFrame): Long = {
-    import graft.operators.{LabelStore, Multimodal}
-    val labels0 = LabelStore.read(spark, labelPath)
-      .localCheckpoint(eager = false)
-    val before = labels0.join(rm, Seq("doc_id")).count()
-    if (before > 0) {
-      val affC = labels0.join(rm, Seq("doc_id"))
-        .select(col("canonical")).distinct()
-      val survIds = labels0.join(broadcast(affC), Seq("canonical"))
-        .select(col("doc_id")).join(rm, Seq("doc_id"), "left_anti")
-      val fps = spark.read.parquet(fpStorePath)
-        .filter(col("band_i") === 0)
-        .select(col("doc_id"), col("fhash").as("dhash"))
-        .join(broadcast(survIds), Seq("doc_id"), "left_semi")
-      LabelStore.remove(spark, labelPath, rm,
-        Multimodal.perceptualNearDupPairs(fps, maxHamming)
-          .select(col("d1"), col("d2")))
-    }
-    before
-  }
-
-  /** [[audioRetractBatch]] with the store half TOMBSTONED — the
-    * deferred takedown on the track-fingerprint store.
-    */
+  /** [[audioRetractBatch]] with the store half tombstoned. */
   def audioRetractDeferred(spark: org.apache.spark.sql.SparkSession,
                            fpStorePath: String, labelPath: String,
                            maxHamming: Int = 3,
                            compactMaxFiles: Int = DefaultCompactMaxFiles,
                            maxTombstoneFiles: Int = 16)(
-                           removeIds: DataFrame): Long = {
-    recoverStoreSwap(spark, fpStorePath)
-    graft.operators.LabelStore.recover(spark, labelPath)
-    val rm = removeIds.select(col("doc_id")).distinct().localCheckpoint()
-    val before = audioRetractLabels(spark, fpStorePath, labelPath,
-      maxHamming, rm)
-    graft.CrashPoints.hit("audioRetractDeferred.labels")
-    graft.sources.Maintenance.tombstoneAppend(spark, fpStorePath,
-      rm, "doc_id")
-    // takedown-only stores have no ingest handler running the trigger
-    compactIfDue(spark, fpStorePath, "band_i", compactMaxFiles,
-      maxTombstoneFiles)(
-      (src, dst) =>
-        graft.operators.Multimodal.frameStoreCompact(spark, src, dst))
-    before
-  }
+                           removeIds: DataFrame): Long =
+    retract(spark, "audioRetract", Seq(SignatureStore.frames(fpStorePath)),
+      labelPath, Deferred(compactMaxFiles, maxTombstoneFiles),
+      perceptualEvidence(spark, fpStorePath, maxHamming), removeIds)
 
-  /** The VECTOR RETRACTION handler — [[dedupRetractBatch]]'s embedding
-    * twin over the live IVF + label stores, with the retraction
-    * evidence derived from the store itself: the affected components'
-    * SURVIVING members fetch their embeddings from the cell layout
-    * (component-bounded semi-join) and their τ-relation recomputes via
-    * the cell-blocked exact pass — no corpus access, no re-embedding.
-    * `nProbe` must match the width the FOLDS ran at (the evidence-
-    * source contract: recontraction must use the same relation the
-    * folds consumed; the registered incremental entry folds at full
-    * fan-out, `nProbe = cents.length`). The store half is CELL-PRUNED
-    * ([[graft.sources.Maintenance.removeIvfRows]] — a vector's rows
-    * live in one cell, so only the retracted ids' cells rewrite),
-    * and — as in the text twin — removing the vectors is NOT optional:
-    * leftover embeddings keep gate-matching withdrawn content and
-    * would resurrect the retracted id as a cluster canonical.
-    * Crash-idempotent the same way: each half gates on its own store's
-    * state; heal-first covers both stores' crash windows. Returns the
-    * number of label rows actually retracted.
+  /** The VECTOR takedown over an IVF cell layout: the survivors fetch
+    * their embeddings from the cells and their τ-relation recomputes
+    * cell-blocked. `nProbe` must match the width the FOLDS ran at
+    * (recontraction must use the relation the folds consumed; the
+    * registered incremental entry folds at `nProbe = cents.length`).
+    * Eager removal rewrites only the cells holding a retracted vector;
+    * deferred queues `vec_id`s, which every stored ANN reader
+    * anti-joins (Similarity's stored probes and
+    * `Pipeline6.ivfPqTopKStored`), and the rows leave with whichever
+    * full rewrite comes first: the zone-count compaction, an eager
+    * takedown, or [[ivfRetrainRebuild]].
     */
   def vectorRetractBatch(spark: org.apache.spark.sql.SparkSession,
                          ivfStorePath: String, labelPath: String,
                          cents: Array[(Int, Seq[Float])], tau: Double,
-                         nProbe: Int)(removeIds: DataFrame): Long = {
-    recoverStoreSwap(spark, ivfStorePath)
-    graft.operators.LabelStore.recover(spark, labelPath)
-    val rm = removeIds.select(col("vec_id").as("doc_id")).distinct()
-      .localCheckpoint()
-    val before = vectorRetractLabels(spark, ivfStorePath, labelPath,
-      cents, tau, nProbe, rm)
-    graft.CrashPoints.hit("vectorRetract.labels")
-    // gated on the CELL store's own state (crash between the halves
-    // retries to completion — the dedupRetractBatch discipline)
-    graft.sources.Maintenance.removeIvfRows(spark, ivfStorePath,
-      rm.select(col("doc_id").as("vec_id")))
-    before
-  }
+                         nProbe: Int)(removeIds: DataFrame): Long =
+    retract(spark, "vectorRetract", Seq(SignatureStore.ivf(ivfStorePath)),
+      labelPath, Eager,
+      vectorEvidence(spark, ivfStorePath, cents, tau, nProbe), removeIds)
 
-  /** The label half of the vector takedown, shared by the eager and
-    * deferred handlers: the affected components' SURVIVING members
-    * fetch their embeddings from the cell store (member set from the
-    * label table, which already excludes every previously retracted
-    * id — eager or deferred — so pending tombstones cannot leak back
-    * in as evidence) and their τ-relation recomputes cell-blocked.
-    */
-  private def vectorRetractLabels(spark: org.apache.spark.sql.SparkSession,
-                                  ivfStorePath: String, labelPath: String,
-                                  cents: Array[(Int, Seq[Float])],
-                                  tau: Double, nProbe: Int,
-                                  rm: DataFrame): Long = {
-    import graft.operators.{LabelStore, Similarity}
-    val labels0 = LabelStore.read(spark, labelPath)
-      .localCheckpoint(eager = false) // three consumers below
-    val before = labels0.join(rm, Seq("doc_id")).count()
-    if (before > 0) {
-      // surviving members of the affected components, embeddings from
-      // the store — the component-bounded evidence reconstruction
-      val affC = labels0.join(rm, Seq("doc_id"))
-        .select(col("canonical")).distinct()
-      val survIds = labels0.join(broadcast(affC), Seq("canonical"))
-        .select(col("doc_id")).join(rm, Seq("doc_id"), "left_anti")
-      val survEmb = spark.read.parquet(ivfStorePath)
-        .select(col("vec_id"), col("embedding"))
-        .join(broadcast(survIds.select(col("doc_id").as("vec_id"))),
-          Seq("vec_id"), "left_semi")
-      LabelStore.remove(spark, labelPath, rm,
-        Similarity.cellBlockedTauPairs(survEmb, cents, tau, nProbe))
-    }
-    before
-  }
-
-  /** [[vectorRetractBatch]] with the store half TOMBSTONED — the
-    * deferred takedown for the LAST store family that paid its rewrite
-    * eagerly: the IVF cell rewrite is already cell-pruned (a vector
-    * lives in exactly one cell), but it is still a rewrite term per
-    * batch, and the zone device is store-agnostic. The label half runs
-    * identically (affected components recontract NOW — labels must
-    * never serve withdrawn rows); the retracted vec_ids then land in
-    * the store's tombstone zone, every stored ANN reader anti-joins
-    * the pending set ([[graft.operators.Similarity]]'s top-k, filtered
-    * and near-dup stored probes, plus the compressed codes probe
-    * `Pipeline6.ivfPqTopKStored`), so a withdrawn vector stops
-    * ranking IMMEDIATELY, and the physical rewrite rides whichever
-    * full rewrite comes first on the maintenance cadence: the
-    * zone-count-triggered compaction ([[compactIfDue]] over the
-    * tombstone-aware `Maintenance.compactPartitioned`), an eager
-    * retraction's pruned rewrite, or the drift-triggered
-    * [[ivfRetrainRebuild]] (both route through `minusTombstones`).
-    *
-    * Same crash discipline as the banded twins: heal-first, each half
-    * gated on its own state (the zone append dedups already-queued
-    * ids), replay converges. No stats table in this family — the label
-    * table is the only derived state, and it keys on its own rows —
-    * so no admission guard is owed: an overlapping batch in the
-    * labels→zone window re-runs the label half as a no-op (the rows
-    * are already gone from the labels) and queues only genuinely-new
-    * ids. Returns the label rows retracted (0 on a retry).
-    */
+  /** [[vectorRetractBatch]] with the store half tombstoned. */
   def vectorRetractDeferred(spark: org.apache.spark.sql.SparkSession,
                             ivfStorePath: String, labelPath: String,
                             cents: Array[(Int, Seq[Float])], tau: Double,
                             nProbe: Int,
                             compactMaxFiles: Int = DefaultCompactMaxFiles,
                             maxTombstoneFiles: Int = 16)(
-                            removeIds: DataFrame): Long = {
-    recoverStoreSwap(spark, ivfStorePath)
-    graft.operators.LabelStore.recover(spark, labelPath)
-    val rm = removeIds.select(col("vec_id").as("doc_id")).distinct()
-      .localCheckpoint()
-    val before = vectorRetractLabels(spark, ivfStorePath, labelPath,
-      cents, tau, nProbe, rm)
-    graft.CrashPoints.hit("vectorRetractDeferred.labels")
-    graft.sources.Maintenance.tombstoneAppend(spark, ivfStorePath,
-      rm.select(col("doc_id").as("vec_id")), "vec_id")
-    // mirror the lexical deferred handler: a store that only ever takes
-    // deferred takedowns has no ingest handler running the zone-count
-    // trigger for it, so the read tax would grow unboundedly without
-    // this inline check (listing-only until the trigger actually fires)
-    compactIfDue(spark, ivfStorePath, "cell", compactMaxFiles,
-      maxTombstoneFiles)(
-      (src, dst) => graft.sources.Maintenance.compactPartitioned(
-        spark, src, dst, "cell"))
-    before
-  }
+                            removeIds: DataFrame): Long =
+    retract(spark, "vectorRetract", Seq(SignatureStore.ivf(ivfStorePath)),
+      labelPath, Deferred(compactMaxFiles, maxTombstoneFiles),
+      vectorEvidence(spark, ivfStorePath, cents, tau, nProbe), removeIds)
+
+  private def vectorEvidence(spark: SparkSession, ivfStorePath: String,
+                             cents: Array[(Int, Seq[Float])], tau: Double,
+                             nProbe: Int)(survIds: DataFrame): DataFrame =
+    graft.operators.Similarity.cellBlockedTauPairs(
+      spark.read.parquet(ivfStorePath)
+        .select(col("vec_id"), col("embedding"))
+        .join(broadcast(survIds.select(col("doc_id").as("vec_id"))),
+          Seq("vec_id"), "left_semi"),
+      cents, tau, nProbe)
 
   /** Drift-triggered IVF RETRAIN + REBUILD — the composition the three
     * existing parts were waiting for: the p112 drift gate
@@ -1819,30 +1646,18 @@ object StreamingOps {
   }
 
   /** The VECTOR maintenance handler — [[dedupMaintainBatch]]'s
-    * embedding twin (p126's loop as a library call): per micro-batch
-    * of (vec_id, embedding) vectors,
-    *
-    *  1. gate — `Similarity.ivfProbeNearDup` against the live
-    *     [[graft.operators.Similarity.ivfWrite]] layout yields EVERY
-    *     published vector within cosine `tau` (all pairs, not just the
-    *     closest — the label fold needs the full evidence, which is
-    *     why this calls the probe rather than
-    *     [[embeddingDedupGateBatch]]'s closest-match verdict);
-    *  2. within-batch τ-pairs from a batch²-bounded exact-cosine block
-    *     (a micro-batch is model-sized next to the corpus);
-    *  3. fold — `LabelStore.update` (the id-generic union-find step),
-    *     so `LabelStore.weightsFromStore` serves current SemDeDup-soft
-    *     weights;
-    *  4. ingest + merge — staged exactly-once via
-    *     [[ivfIngestBatch]]/[[ivfMergeStaged]], so the next batch's
-    *     probe sees this one.
-    *
-    * At `nProbe = nCells` the fold is EXACT (append-equals-rebuild,
-    * p126's oracle-proved property); smaller widths trade recall per
-    * the p104/p116 dials, and the labels remain a REFINEMENT of the
-    * exact ones (DedupSpec pins it). Returns the gate's (vec_id,
-    * dup_of, cos) pairs for routing. Same contracts as every handler
-    * here: new ids only, serial folds, `cents` frozen at store build.
+    * embedding twin (p126's loop as a library call) over an IVF cell
+    * layout: the gate is `Similarity.ivfProbeNearDup`, which yields
+    * EVERY published vector within cosine `tau` (all pairs, not just
+    * the closest — the fold needs the full evidence, which is why this
+    * calls the probe rather than [[embeddingDedupGateBatch]]); the
+    * within-batch τ-pairs come from the cell-blocked exact pass at full
+    * fan-out. At `nProbe = nCells` the fold is EXACT
+    * (append-equals-rebuild, p126's oracle-proved property); smaller
+    * widths trade recall per the p104/p116 dials, and the labels remain
+    * a REFINEMENT of the exact ones (DedupSpec pins it). Returns the
+    * gate's (vec_id, dup_of, cos) pairs; `cents` is frozen at store
+    * build.
     */
   def vectorDedupMaintainBatch(spark: org.apache.spark.sql.SparkSession,
                                ivfStorePath: String, labelPath: String,
@@ -1851,14 +1666,11 @@ object StreamingOps {
                                tau: Double, nProbe: Int = 2,
                                compactMaxFiles: Int = DefaultCompactMaxFiles)(
                                batch: DataFrame, id: Long): DataFrame = {
-    import graft.operators.{LabelStore, Similarity}
-    recoverStoreSwap(spark, ivfStorePath) // the shared heal-first step
+    import graft.operators.Similarity
+    recoverStoreSwap(spark, ivfStorePath)
     val b = batch.select(col("vec_id"), col("embedding")).localCheckpoint()
-    def noVerdicts: DataFrame = spark.emptyDataFrame
-      .withColumn("vec_id", lit(0L)).withColumn("dup_of", lit(0L))
-      .withColumn("cos", lit(0.0d))
-      .limit(0)
-    if (b.isEmpty) return noVerdicts
+    if (b.isEmpty)
+      return emptyFrame(spark, "vec_id" -> 0L, "dup_of" -> 0L, "cos" -> 0.0d)
     val gate = Similarity
       .ivfProbeNearDup(spark, ivfStorePath, b, cents, tau, nProbe)
       .select(col("qid").as("vec_id"), col("cid").as("dup_of"), col("cos"))
@@ -1867,159 +1679,129 @@ object StreamingOps {
     // exact at any batch size (every pair shares a cell) with the
     // comparisons hash-partitioned by cell instead of one cartesian
     // stage, so an oversized micro-batch cannot plan a cross join
-    val within = Similarity.cellBlockedTauPairs(
-      b, cents, tau, nProbe = cents.length)
-    // the dedupMaintainBatch redelivery guard, shared rationale
-    if (!batchFolded(spark, stagePath, id)) {
-      LabelStore.recoverAndUpdate(spark, labelPath, b.select(col("vec_id").as("doc_id")),
-        within.union(
-          gate.select(col("vec_id").as("d1"), col("dup_of").as("d2"))))
-      markFolded(spark, stagePath, id)
-    }
-    ivfIngestBatch(cents, stagePath)(b, id)
-    ivfMergeStaged(spark, stagePath, ivfStorePath)
-    // the IVF layout has no within-file sort to restore (probes scan
-    // whole cells), so the plain partition compactor suffices
-    compactIfDue(spark, ivfStorePath, "cell", compactMaxFiles)(
-      (src, dst) => graft.sources.Maintenance.compactPartitioned(
-        spark, src, dst, "cell"))
+    maintainTail(spark, labelPath, stagePath, id, compactMaxFiles, gate)(
+      b.select(col("vec_id").as("doc_id")),
+      Similarity.cellBlockedTauPairs(b, cents, tau, nProbe = cents.length))(
+      (stagePath, Similarity.assignCells(cents, b),
+        SignatureStore.ivf(ivfStorePath)))
     gate
   }
 
-  /** The VIDEO maintenance handler — [[dedupMaintainBatch]]'s clip
-    * twin (p127's loop as a library call): per micro-batch of decoded
-    * clips,
-    *
-    *  1. gate — [[graft.operators.Multimodal.videoNearDupStored]]
-    *     probes the live banded frame store for published equal-length
-    *     temporal near-dups (p90's relation, batch vs store);
-    *  2. within-batch pairs from p90's own banded device;
-    *  3. fold — `LabelStore.update`, so p91's clip-cluster labels and
-    *     their p118/p125 weights stay current with no re-decode of the
-    *     published corpus;
-    *  4. ingest + merge — the batch's banded frame signatures land
-    *     exactly-once via the staged [[frameIngestBatch]] shape and
-    *     fold with [[frameMergeStaged]]; the file-count trigger
-    *     compacts with `frameStoreCompact` when slivers accumulate.
-    *
-    * ONE decode per batch feeds all four stages. `batch` carries the
-    * raw video payloads (the [[frameIngestBatch]] contract); same
-    * shared contracts as every handler here: new ids only, serial
-    * folds, redelivery-safe via the fold marker + the label
-    * store's own anti-join.
+  /** Banded Hamming gate of arriving one-frame hashes (`doc_id` plus
+    * `hashCol`) against a frame store: every stored hash within
+    * `maxHamming`, as (doc_id, dup_of, hamming).
+    */
+  private def perceptualGate(spark: SparkSession, storePath: String,
+                             hashes: DataFrame, hashCol: String,
+                             maxHamming: Int): DataFrame =
+    graft.operators.Multimodal.frameProbeStoredDF(spark, storePath,
+        hashes.select(col("doc_id").as("qid"), col(hashCol).as("qhash")),
+        maxHamming)
+      .filter(col("doc_id") =!= col("qid"))
+      .select(col("qid").as("doc_id"), col("doc_id").as("dup_of"),
+        col("hamming"))
+
+  /** p79's banded Hamming pairs over one-frame hashes. */
+  private def perceptualPairs(hashes: DataFrame, hashCol: String,
+                              maxHamming: Int): DataFrame =
+    graft.operators.Multimodal.perceptualNearDupPairs(
+        hashes.select(col("doc_id"), col(hashCol).as("dhash")), maxHamming)
+      .select(col("d1"), col("d2"))
+
+  /** p90's equal-length aligned pairs over decoded frames. */
+  private def videoPairs(frames: DataFrame, maxHamming: Int): DataFrame =
+    graft.operators.Multimodal.videoNearDupPairs(frames, maxHamming)
+      .select(col("d1"), col("d2"))
+
+  /** The VIDEO maintenance handler (p127's loop as a library call)
+    * over a banded clip store: ONE decode of the raw clips (the
+    * [[frameIngestBatch]] contract) feeds the gate
+    * ([[graft.operators.Multimodal.videoNearDupStored]], p90's relation
+    * batch vs store), the within-batch pairs ([[videoPairs]]) and the
+    * banded frame rows, so p91's clip-cluster labels and their
+    * p118/p125 weights stay current with no re-decode of the published
+    * corpus.
     */
   def videoMaintainBatch(spark: org.apache.spark.sql.SparkSession,
                          frameStorePath: String, labelPath: String,
                          stagePath: String, maxHamming: Int = 3,
                          compactMaxFiles: Int = DefaultCompactMaxFiles)(
                          batch: DataFrame, id: Long): DataFrame = {
-    import graft.operators.{LabelStore, Multimodal}
-    def noVerdicts: DataFrame = spark.emptyDataFrame
-      .withColumn("doc_id", lit(0L)).withColumn("dup_of", lit(0L))
-      .withColumn("max_hamming", lit(0))
-      .limit(0)
-    recoverStoreSwap(spark, frameStorePath) // the shared heal-first step
+    import graft.operators.Multimodal
+    recoverStoreSwap(spark, frameStorePath)
     val frames = Multimodal.decodeVideoFrames(batch)
       .select(col("doc_id"), col("frame"), col("n_frames"), col("fhash"))
       .localCheckpoint() // ONE decode: gate + within pairs + ingest
-    if (frames.isEmpty) return noVerdicts
+    if (frames.isEmpty)
+      return emptyFrame(spark, "doc_id" -> 0L, "dup_of" -> 0L,
+        "max_hamming" -> 0)
     val gate = Multimodal
       .videoNearDupStored(spark, frameStorePath, frames, maxHamming)
       .localCheckpoint() // feeds the fold AND the return
-    if (!batchFolded(spark, stagePath, id)) {
-      LabelStore.recoverAndUpdate(spark, labelPath,
-        frames.select(col("doc_id")).distinct(),
-        Multimodal.videoNearDupPairs(frames, maxHamming)
-          .select(col("d1"), col("d2"))
-          .union(gate.select(col("doc_id").as("d1"), col("dup_of").as("d2"))))
-      markFolded(spark, stagePath, id)
-    }
-    idempotentParquetBatch(stagePath)(
-      Multimodal.bandFrames(
-        frames.select(col("doc_id"), col("frame"), col("fhash"))), id)
-    frameMergeStaged(spark, stagePath, frameStorePath)
-    compactIfDue(spark, frameStorePath, "band_i", compactMaxFiles)(
-      (src, dst) => Multimodal.frameStoreCompact(spark, src, dst))
+    maintainTail(spark, labelPath, stagePath, id, compactMaxFiles, gate)(
+      frames.select(col("doc_id")).distinct(),
+      videoPairs(frames, maxHamming))(
+      (stagePath, Multimodal.bandFrames(
+        frames.select(col("doc_id"), col("frame"), col("fhash"))),
+        SignatureStore.frames(frameStorePath)))
     gate
   }
 
-  /** The AUDIO maintenance handler — the fourth modality of the
-    * family (p128's loop as a library call): per micro-batch of raw
-    * tracks, decode ONCE to the 60-bit profile fingerprint, gate
-    * against the live track-fingerprint store (the banded
-    * `frameStoreWrite` layout over one-frame `(doc_id, 0, afp)` rows —
-    * no alignment stage, a track's fingerprint IS its signature),
-    * fold within-batch + gate pairs into the label store, then
-    * staged-ingest the banded fingerprint rows. Keeps p79's cluster
-    * state (and its weights) live with no re-decode of the published
-    * corpus. Shared handler contracts throughout.
+  /** The AUDIO maintenance handler (p128's loop as a library call)
+    * over the banded track-fingerprint store of one-frame
+    * `(doc_id, 0, afp)` rows — no alignment stage, a track's 60-bit
+    * fingerprint IS its signature: ONE decode feeds the
+    * [[perceptualGate]], the within-batch [[perceptualPairs]] and the
+    * banded rows, keeping p79's cluster state live with no re-decode
+    * of the published corpus.
     */
   def audioMaintainBatch(spark: org.apache.spark.sql.SparkSession,
                          fpStorePath: String, labelPath: String,
                          stagePath: String, maxHamming: Int = 3,
                          compactMaxFiles: Int = DefaultCompactMaxFiles)(
                          batch: DataFrame, id: Long): DataFrame = {
-    import graft.operators.{LabelStore, Multimodal}
-    def noVerdicts: DataFrame = spark.emptyDataFrame
-      .withColumn("doc_id", lit(0L)).withColumn("dup_of", lit(0L))
-      .withColumn("hamming", lit(0))
-      .limit(0)
-    recoverStoreSwap(spark, fpStorePath) // the shared heal-first step
+    import graft.operators.Multimodal
+    recoverStoreSwap(spark, fpStorePath)
     val fps = Multimodal.decodeWave(batch)
       .select(col("doc_id"), col("afp"))
       .localCheckpoint() // ONE decode: gate + within pairs + ingest
-    if (fps.isEmpty) return noVerdicts
-    val gate = Multimodal.frameProbeStoredDF(spark, fpStorePath,
-        fps.select(col("doc_id").as("qid"), col("afp").as("qhash")),
-        maxHamming)
-      .filter(col("doc_id") =!= col("qid"))
-      .select(col("qid").as("doc_id"), col("doc_id").as("dup_of"),
-        col("hamming"))
+    if (fps.isEmpty)
+      return emptyFrame(spark, "doc_id" -> 0L, "dup_of" -> 0L, "hamming" -> 0)
+    val gate = perceptualGate(spark, fpStorePath, fps, "afp", maxHamming)
       .localCheckpoint() // feeds the fold AND the return
-    if (!batchFolded(spark, stagePath, id)) {
-      LabelStore.recoverAndUpdate(spark, labelPath, fps.select(col("doc_id")),
-        Multimodal.perceptualNearDupPairs(
-            fps.select(col("doc_id"), col("afp").as("dhash")), maxHamming)
-          .select(col("d1"), col("d2"))
-          .union(gate.select(col("doc_id").as("d1"), col("dup_of").as("d2"))))
-      markFolded(spark, stagePath, id)
-    }
-    idempotentParquetBatch(stagePath)(
-      Multimodal.bandFrames(fps.select(col("doc_id"),
-        lit(0).as("frame"), col("afp").as("fhash"))), id)
-    frameMergeStaged(spark, stagePath, fpStorePath)
-    compactIfDue(spark, fpStorePath, "band_i", compactMaxFiles)(
-      (src, dst) => Multimodal.frameStoreCompact(spark, src, dst))
+    maintainTail(spark, labelPath, stagePath, id, compactMaxFiles, gate)(
+      fps.select(col("doc_id")), perceptualPairs(fps, "afp", maxHamming))(
+      (stagePath, Multimodal.bandFrames(fps.select(col("doc_id"),
+        lit(0).as("frame"), col("afp").as("fhash"))),
+        SignatureStore.frames(fpStorePath)))
     gate
   }
 
   /** The CROSS-MODAL maintenance handler — p132's loop as a library
-    * call, the composed form of the four per-modality handlers over
-    * ONE unified label space: per micro-batch of documents carrying
-    * every modality's raw payload (`doc_id, text, img, wav, vid` —
-    * the three binary columns in the attach writers' payload format),
+    * call, the per-modality handlers composed over ONE unified label
+    * space and four banded frame stores: per micro-batch of documents
+    * carrying every modality's raw payload (`doc_id, text, img, wav,
+    * vid` — the three binary columns in the attach writers' payload
+    * format),
     *
     *  1. decode each modality ONCE (text hashes to the (th, th2)
     *     128-bit composite as 2-frame clips; raster to dHash; RIFF/PCM
     *     to the 60-bit profile fingerprint; video to frame hashes);
-    *  2. gate each modality against ITS live banded store (exact-text
-    *     via the radius-0 aligned verify, image/audio via the banded
-    *     Hamming probe, video via the anchor-probe + aligned verify);
+    *  2. gate each modality against ITS store (exact-text via the
+    *     radius-0 aligned verify, image/audio via [[perceptualGate]],
+    *     video via the anchor-probe + aligned verify);
     *  3. fold ALL evidence — four within-batch relations plus four
-    *     gate feeds — into the ONE label store with a single
-    *     union-find step, so a document whose text matches one
-    *     published doc and whose audio matches another merges all
-    *     three families exactly as p85's batch contraction would;
-    *  4. staged-ingest each modality's banded signature rows
-    *     exactly-once under its own stage subdir and merge, with the
-    *     per-store compaction triggers.
+    *     gate feeds — with a single union-find step, so a document
+    *     whose text matches one published doc and whose audio matches
+    *     another merges all three families exactly as p85's batch
+    *     contraction would;
+    *  4. ingest each modality's banded rows under its own stage
+    *     subdirectory `stagePath/<txt|img|aud|vid>`; the fold marker
+    *     stays at `stagePath`.
     *
-    * Shared handler contracts: new ids only, serial folds,
-    * redelivery-safe via the fold marker + the label store's own
-    * anti-join. Returns the gate verdicts tagged by modality. The
-    * label store's weights then serve cross-modal-family soft-dedup
-    * release draws with no corpus re-decode — the state p85 used to
-    * recompute from scratch per refresh.
+    * Returns the gate verdicts tagged by modality; the label store's
+    * weights then serve cross-modal soft-dedup release draws with no
+    * corpus re-decode.
     */
   def multimodalMaintainBatch(spark: org.apache.spark.sql.SparkSession,
                               txtStorePath: String, imgStorePath: String,
@@ -2028,15 +1810,13 @@ object StreamingOps {
                               maxHamming: Int = 3,
                               compactMaxFiles: Int = DefaultCompactMaxFiles)(
                               batch: DataFrame, id: Long): DataFrame = {
-    import graft.operators.{LabelStore, Multimodal, Pipeline9}
-    def noVerdicts: DataFrame = spark.emptyDataFrame
-      .withColumn("doc_id", lit(0L)).withColumn("dup_of", lit(0L))
-      .withColumn("modality", lit(""))
-      .limit(0)
-    val stores = Seq(txtStorePath, imgStorePath, audStorePath, vidStorePath)
-    stores.foreach(recoverStoreSwap(spark, _)) // the shared heal-first step
+    import graft.operators.{Multimodal, Pipeline9}
+    Seq(txtStorePath, imgStorePath, audStorePath, vidStorePath)
+      .foreach(recoverStoreSwap(spark, _))
     val b = batch.localCheckpoint()
-    if (b.isEmpty) return noVerdicts
+    if (b.isEmpty)
+      return emptyFrame(spark, "doc_id" -> 0L, "dup_of" -> 0L,
+        "modality" -> "")
     // ONE decode per modality: gates + within pairs + ingest rows
     val tf = Pipeline9.exactTextSigFrames(b.select(col("doc_id"), col("text")))
       .localCheckpoint()
@@ -2050,53 +1830,37 @@ object StreamingOps {
         b.select(col("doc_id"), col("vid").as("payload")))
       .select(col("doc_id"), col("frame"), col("n_frames"), col("fhash"))
       .localCheckpoint()
-    val gate = Multimodal.videoNearDupStored(spark, txtStorePath, tf, 0)
-      .select(col("doc_id"), col("dup_of"), lit("text").as("modality"))
-      .unionByName(Multimodal.frameProbeStoredDF(spark, imgStorePath,
-          dh.select(col("doc_id").as("qid"), col("dhash").as("qhash")),
-          maxHamming)
-        .filter(col("doc_id") =!= col("qid"))
-        .select(col("qid").as("doc_id"), col("doc_id").as("dup_of"),
-          lit("image").as("modality")))
-      .unionByName(Multimodal.frameProbeStoredDF(spark, audStorePath,
-          af.select(col("doc_id").as("qid"), col("afp").as("qhash")),
-          maxHamming)
-        .filter(col("doc_id") =!= col("qid"))
-        .select(col("qid").as("doc_id"), col("doc_id").as("dup_of"),
-          lit("audio").as("modality")))
-      .unionByName(Multimodal.videoNearDupStored(spark, vidStorePath, vf,
-          maxHamming)
-        .select(col("doc_id"), col("dup_of"), lit("video").as("modality")))
+    def tagged(g: DataFrame, modality: String) =
+      g.select(col("doc_id"), col("dup_of"), lit(modality).as("modality"))
+    val gate = tagged(Multimodal.videoNearDupStored(spark, txtStorePath, tf, 0),
+        "text")
+      .unionByName(tagged(
+        perceptualGate(spark, imgStorePath, dh, "dhash", maxHamming), "image"))
+      .unionByName(tagged(
+        perceptualGate(spark, audStorePath, af, "afp", maxHamming), "audio"))
+      .unionByName(tagged(
+        Multimodal.videoNearDupStored(spark, vidStorePath, vf, maxHamming),
+        "video"))
       .localCheckpoint() // feeds the fold AND the return
-    if (!batchFolded(spark, stagePath, id)) {
-      val within = Pipeline9.exactTextPairsOf(
-          b.select(col("doc_id"), col("text")))
-        .union(Multimodal.perceptualNearDupPairs(dh, maxHamming)
-          .select(col("d1"), col("d2")))
-        .union(Multimodal.perceptualNearDupPairs(
-            af.select(col("doc_id"), col("afp").as("dhash")), maxHamming)
-          .select(col("d1"), col("d2")))
-        .union(Multimodal.videoNearDupPairs(vf, maxHamming)
-          .select(col("d1"), col("d2")))
-      LabelStore.recoverAndUpdate(spark, labelPath,
-        b.select(col("doc_id")).distinct(),
-        within.union(
-          gate.select(col("doc_id").as("d1"), col("dup_of").as("d2"))))
-      markFolded(spark, stagePath, id)
-    }
-    val rows = Seq(
-      (tf.select(col("doc_id"), col("frame"), col("fhash")), "txt", txtStorePath),
-      (dh.select(col("doc_id"), lit(0).as("frame"),
-        col("dhash").as("fhash")), "img", imgStorePath),
-      (af.select(col("doc_id"), lit(0).as("frame"),
-        col("afp").as("fhash")), "aud", audStorePath),
-      (vf.select(col("doc_id"), col("frame"), col("fhash")), "vid", vidStorePath))
-    rows.foreach { case (r, tag, store) =>
-      idempotentParquetBatch(s"$stagePath/$tag")(Multimodal.bandFrames(r), id)
-      frameMergeStaged(spark, s"$stagePath/$tag", store)
-      compactIfDue(spark, store, "band_i", compactMaxFiles)(
-        (src, dst) => Multimodal.frameStoreCompact(spark, src, dst))
-    }
+    def oneFrame(d: DataFrame, hashCol: String) =
+      d.select(col("doc_id"), lit(0).as("frame"), col(hashCol).as("fhash"))
+    maintainTail(spark, labelPath, stagePath, id, compactMaxFiles, gate)(
+      b.select(col("doc_id")).distinct(),
+      Pipeline9.exactTextPairsOf(b.select(col("doc_id"), col("text")))
+        .union(perceptualPairs(dh, "dhash", maxHamming))
+        .union(perceptualPairs(af, "afp", maxHamming))
+        .union(videoPairs(vf, maxHamming)))(
+      Seq(
+        ("txt", tf.select(col("doc_id"), col("frame"), col("fhash")),
+          txtStorePath),
+        ("img", oneFrame(dh, "dhash"), imgStorePath),
+        ("aud", oneFrame(af, "afp"), audStorePath),
+        ("vid", vf.select(col("doc_id"), col("frame"), col("fhash")),
+          vidStorePath))
+        .map { case (tag, rows, store) =>
+          (s"$stagePath/$tag", Multimodal.bandFrames(rows),
+            SignatureStore.frames(store))
+        }: _*)
     gate
   }
 

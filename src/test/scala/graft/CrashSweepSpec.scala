@@ -40,28 +40,33 @@ class CrashSweepSpec extends AnyFunSuite with SparkTestBase {
     * final state; then per boundary i the stores rebuild fresh, the
     * handler dies at i (the [[CrashPoints.InjectedCrash]] a real crash
     * would be), the same call re-runs as the crash retry, and the
-    * healed state must equal the uncrashed one row for row.
+    * healed state must equal the uncrashed one row for row. The names
+    * of the boundaries the crash runs died at must equal `points`, in
+    * order: a refactor may not drop, add, rename or reorder a
+    * handler's crash windows.
     */
-  private def sweep(tag: String)(build: () => Unit)(run: () => Unit)(
-      state: () => Seq[String]): Unit = {
+  private def sweep(tag: String, points: Seq[String])(build: () => Unit)(
+      run: () => Unit)(state: () => Seq[String]): Unit = {
     build()
     CrashPoints.arm(Int.MaxValue) // count boundaries, kill nothing
     val n = try { run(); CrashPoints.crossed } finally CrashPoints.disarm()
     val expected = state()
     assert(n > 0, s"$tag: no instrumented boundary crossed")
-    (0 until n).foreach { i =>
+    val crossed = (0 until n).map { i =>
       build()
       val died =
-        try { CrashPoints.arm(i); run(); false }
-        catch { case _: CrashPoints.InjectedCrash => true }
+        try { CrashPoints.arm(i); run(); None }
+        catch { case c: CrashPoints.InjectedCrash => Some(c.point) }
         finally CrashPoints.disarm()
-      assert(died, s"$tag: boundary $i not reached on the crash run " +
-        "(boundary set changed between runs?)")
+      assert(died.isDefined, s"$tag: boundary $i not reached on the " +
+        "crash run (boundary set changed between runs?)")
       run() // the crash retry
       assert(state() === expected,
         s"$tag: retry after a crash at boundary $i did not converge " +
           "to the uncrashed state")
+      died.get
     }
+    assert(crossed === points, s"$tag: crash-boundary sequence changed")
   }
 
   // ---- text: the 12-doc corpus of RetractionSpec ----
@@ -95,10 +100,11 @@ class CrashSweepSpec extends AnyFunSuite with SparkTestBase {
         lbl)
     }
     val rm = Seq(7L, 10L).toDF("doc_id")
-    sweep("dedupRetractBatch")(build)(
+    sweep("dedupRetractBatch", Seq("dedupRetract.labels",
+        "removePartitionedRows.staged", "swapInCompacted.mid"))(build)(
       () => StreamingOps.dedupRetractBatch(spark, lsh, lbl)(rm))(
       () => labelState(lbl) ++ storeState(lsh))
-    sweep("dedupRetractDeferred")(build)(
+    sweep("dedupRetractDeferred", Seq("dedupRetractDeferred.labels"))(build)(
       () => StreamingOps.dedupRetractDeferred(spark, lsh, lbl)(rm))(
       () => labelState(lbl) ++ storeState(lsh) ++ zoneState(lsh))
   }
@@ -112,10 +118,13 @@ class CrashSweepSpec extends AnyFunSuite with SparkTestBase {
           .head().toString) ++
         zoneState(Bucketed.tableLocation(spark, t))
     val rm = Seq(7L, 10L).toDF("doc_id")
-    sweep("lexicalRetractBatch")(build)(
+    sweep("lexicalRetractBatch", Seq("lexicalRetract.stats",
+        "bucketedSwap.staged", "bucketedSwap.dropped",
+        "lexicalRetract.postings"))(build)(
       () => StreamingOps.lexicalRetractBatch(spark, t, nBuckets = 4,
         retractId = -2L)(rm))(state)
-    sweep("lexicalRetractDeferred")(build)(
+    sweep("lexicalRetractDeferred", Seq("lexicalRetractDeferred.stats",
+        "lexicalRetractDeferred.zone"))(build)(
       () => StreamingOps.lexicalRetractDeferred(spark, t, nBuckets = 4,
         retractId = -2L, compactMaxFiles = 0)(rm))(state)
   }
@@ -143,10 +152,11 @@ class CrashSweepSpec extends AnyFunSuite with SparkTestBase {
         lbl)
     }
     val rm = Seq(1L).toDF("doc_id")
-    sweep("videoRetractBatch")(build)(
+    sweep("videoRetractBatch", Seq("videoRetract.labels",
+        "removePartitionedRows.staged", "swapInCompacted.mid"))(build)(
       () => StreamingOps.videoRetractBatch(spark, frm, lbl)(rm))(
       () => labelState(lbl) ++ storeState(frm))
-    sweep("videoRetractDeferred")(build)(
+    sweep("videoRetractDeferred", Seq("videoRetractDeferred.labels"))(build)(
       () => StreamingOps.videoRetractDeferred(spark, frm, lbl)(rm))(
       () => labelState(lbl) ++ storeState(frm) ++ zoneState(frm))
   }
@@ -169,10 +179,11 @@ class CrashSweepSpec extends AnyFunSuite with SparkTestBase {
         lbl)
     }
     val rm = Seq(1L).toDF("doc_id")
-    sweep("audioRetractBatch")(build)(
+    sweep("audioRetractBatch", Seq("audioRetract.labels",
+        "removePartitionedRows.staged", "swapInCompacted.mid"))(build)(
       () => StreamingOps.audioRetractBatch(spark, fp, lbl)(rm))(
       () => labelState(lbl) ++ storeState(fp))
-    sweep("audioRetractDeferred")(build)(
+    sweep("audioRetractDeferred", Seq("audioRetractDeferred.labels"))(build)(
       () => StreamingOps.audioRetractDeferred(spark, fp, lbl)(rm))(
       () => labelState(lbl) ++ storeState(fp) ++ zoneState(fp))
   }
@@ -196,11 +207,12 @@ class CrashSweepSpec extends AnyFunSuite with SparkTestBase {
         lbl)
     }
     val rm = Seq(0L).toDF("vec_id")
-    sweep("vectorRetractBatch")(build)(
+    sweep("vectorRetractBatch",
+        Seq("vectorRetract.labels", "removePrunedRows.overwrite"))(build)(
       () => StreamingOps.vectorRetractBatch(spark, ivf, lbl, cents,
         tau = 0.95, nProbe = 4)(rm))(
       () => labelState(lbl) ++ storeState(ivf))
-    sweep("vectorRetractDeferred")(build)(
+    sweep("vectorRetractDeferred", Seq("vectorRetractDeferred.labels"))(build)(
       () => StreamingOps.vectorRetractDeferred(spark, ivf, lbl, cents,
         tau = 0.95, nProbe = 4)(rm))(
       () => labelState(lbl) ++ storeState(ivf) ++ zoneState(ivf))
@@ -210,7 +222,8 @@ class CrashSweepSpec extends AnyFunSuite with SparkTestBase {
     val seed = Similarity.seedCentroids(embFix, 4)
     var ivf = ""
     def build(): Unit = { ivf = tmp("rtivf"); Similarity.ivfWrite(embFix, seed, ivf) }
-    sweep("ivfRetrainRebuild")(build)(
+    sweep("ivfRetrainRebuild", Seq("ivfRetrainRebuild.layout",
+        "ivfRetrainRebuild.model", "swapInCompacted.mid"))(build)(
       () => StreamingOps.ivfRetrainRebuild(spark, ivf, seed, rounds = 2))(
       () => storeState(ivf) ++ rows(spark.read.parquet(s"$ivf/_model")))
   }
@@ -261,10 +274,21 @@ class CrashSweepSpec extends AnyFunSuite with SparkTestBase {
     def state(): Seq[String] =
       labelState(lbl) ++ Seq(txt, img, aud, vid).flatMap(storeState)
     val rm = Seq(2L).toDF("doc_id")
-    sweep("multimodalRetractBatch")(build)(
+    sweep("multimodalRetractBatch", Seq("multimodalRetract.labels",
+        "removePartitionedRows.staged", "swapInCompacted.mid",
+        "multimodalRetract.store",
+        "removePartitionedRows.staged", "swapInCompacted.mid",
+        "multimodalRetract.store",
+        "removePartitionedRows.staged", "swapInCompacted.mid",
+        "multimodalRetract.store",
+        "removePartitionedRows.staged", "swapInCompacted.mid",
+        "multimodalRetract.store"))(build)(
       () => StreamingOps.multimodalRetractBatch(spark, txt, img, aud,
         vid, lbl)(rm))(state)
-    sweep("multimodalRetractDeferred")(build)(
+    sweep("multimodalRetractDeferred", Seq("multimodalRetractDeferred.labels",
+        "multimodalRetractDeferred.zone", "multimodalRetractDeferred.zone",
+        "multimodalRetractDeferred.zone", "multimodalRetractDeferred.zone"))(
+        build)(
       () => StreamingOps.multimodalRetractDeferred(spark, txt, img, aud,
         vid, lbl)(rm))(
       () => state() ++ Seq(txt, img, aud, vid).flatMap(zoneState))

@@ -831,32 +831,44 @@ class RetractionSpec extends AnyFunSuite with SparkTestBase {
       .select(col("vec_id"), col("embedding")).localCheckpoint()
     val cents = Similarity.seedCentroids(emb, 8)
     val cb = Pipeline6.pqCodebook(emb)
-    val ivf = java.nio.file.Files.createTempDirectory("tdv_ivf_").toString
-    val codes = java.nio.file.Files.createTempDirectory("tdv_codes_").toString
-    val lbl = java.nio.file.Files.createTempDirectory("tdv_lbl_").toString
-    Similarity.ivfWrite(emb, cents, ivf)
-    Pipeline6.ivfPqWrite(cents, cb, emb, codes)
-    LabelStore.write(LabelStore.labelsFor(
-      emb.select(col("vec_id").as("doc_id")),
-      Seq.empty[(Long, Long)].toDF("d1", "d2")), lbl)
-
     val rm = emb.filter(pmod(col("vec_id"), lit(10L)) === 3L)
       .select(col("vec_id"))
-    val n = Engine.takedownVectors(spark, rm, ivf, lbl, cents,
-      tau = 0.3, nProbe = 8, codesStorePath = Some(codes))
-    assert(n === rm.count())
-    assert(spark.read.parquet(ivf).join(rm, Seq("vec_id"), "left_semi").isEmpty)
-    assert(spark.read.parquet(codes).join(rm, Seq("vec_id"), "left_semi").isEmpty)
-    assert(LabelStore.read(spark, lbl)
-      .join(rm.select(col("vec_id").as("doc_id")), Seq("doc_id")).isEmpty)
-    // unrankable through the compressed index even at full fan-out
-    val qs = emb.filter(col("vec_id").isin(1L, 2L))
-    assert(!Pipeline6.ivfPqTopKStored(spark, codes, qs, cents, cb,
-        k = 1000, nProbe = 8).collect()
-      .exists(r => r.getLong(1) % 10L === 3L))
-    // replay is a no-op
-    assert(Engine.takedownVectors(spark, rm, ivf, lbl, cents,
-      tau = 0.3, nProbe = 8, codesStorePath = Some(codes)) === 0L)
+    // eager removes the rows from both cell layouts; deferred queues
+    // them in each store's tombstone zone, which every reader anti-joins
+    Seq(false, true).foreach { deferred =>
+      val ivf = java.nio.file.Files.createTempDirectory("tdv_ivf_").toString
+      val codes = java.nio.file.Files.createTempDirectory("tdv_codes_").toString
+      val lbl = java.nio.file.Files.createTempDirectory("tdv_lbl_").toString
+      Similarity.ivfWrite(emb, cents, ivf)
+      Pipeline6.ivfPqWrite(cents, cb, emb, codes)
+      LabelStore.write(LabelStore.labelsFor(
+        emb.select(col("vec_id").as("doc_id")),
+        Seq.empty[(Long, Long)].toDF("d1", "d2")), lbl)
+
+      val n = Engine.takedownVectors(spark, rm, ivf, lbl, cents,
+        tau = 0.3, nProbe = 8, codesStorePath = Some(codes),
+        deferred = deferred)
+      assert(n === rm.count())
+      Seq(ivf, codes).foreach { p =>
+        val stored = spark.read.parquet(p)
+        assert((if (deferred) Maintenance.minusTombstones(spark, p, stored)
+          else stored).join(rm, Seq("vec_id"), "left_semi").isEmpty,
+          s"deferred=$deferred: retracted rows still read from $p")
+        assert(Maintenance.tombstones(spark, p).isDefined === deferred,
+          s"deferred=$deferred: tombstone zone of $p")
+      }
+      assert(LabelStore.read(spark, lbl)
+        .join(rm.select(col("vec_id").as("doc_id")), Seq("doc_id")).isEmpty)
+      // unrankable through the compressed index even at full fan-out
+      val qs = emb.filter(col("vec_id").isin(1L, 2L))
+      assert(!Pipeline6.ivfPqTopKStored(spark, codes, qs, cents, cb,
+          k = 1000, nProbe = 8).collect()
+        .exists(r => r.getLong(1) % 10L === 3L))
+      // replay is a no-op
+      assert(Engine.takedownVectors(spark, rm, ivf, lbl, cents,
+        tau = 0.3, nProbe = 8, codesStorePath = Some(codes),
+        deferred = deferred) === 0L)
+    }
   }
 
   test("IVF-PQ codes retraction: probe parity with a rebuild of the survivors, untouched cells intact") {
