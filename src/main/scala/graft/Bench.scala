@@ -1,13 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
 
-  /** Render the per-query map as a JSON object literal, heaviest query
-    * first and seconds rounded to 3 decimals — the harness captures a
-    * bounded TAIL of stdout, so the compact rendering is what keeps the
-    * contractual artifact parseable (round 10's full-precision,
-    * hash-ordered line lost ~2/3 of its keys to truncation).
-    */
   /** Locale-proof 3-decimal rendering: the f-interpolator delegates to
     * the JVM default locale, which on a comma-decimal locale would emit
     * unparseable JSON in the contractual artifact.
@@ -15,64 +8,24 @@ object Bench {
   private def sec(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 
+  /** Render the per-query map as a JSON object literal, heaviest query
+    * first and seconds rounded to 3 decimals — the harness captures a
+    * bounded TAIL of stdout, so the compact rendering is what keeps the
+    * contractual artifact parseable (round 10's full-precision,
+    * hash-ordered line lost ~2/3 of its keys to truncation).
+    */
   private def renderQueries(results: Seq[(String, Double)]): String =
     results.sortBy(-_._2)
       .map { case (k, v) => "\"" + k + "\":" + sec(v) }
       .mkString("{", ",", "}")
 
-  /** PRICING CLASS of each registered entry, so the single-pass total
-    * diffs like-for-like: most entries price a steady-state PROBE
-    * against memoized live state (index builds are charged to the
-    * untimed warmup pass, as on a long-lived cluster), but some
-    * deliberately price heavier operational context PER REP — the 2×
-    * rule and round-over-round total diffs should compare within a
-    * class, not across the mixture. Default: "probe".
-    *
-    *  - "ingestion": the incremental fold loops rebuild their stores
-    *    and run the full multi-batch ingestion per rep — the fold IS
-    *    the product being priced.
-    *  - "retraction": per-rep store rebuild + composed takedown (the
-    *    differentials that must exercise the takedown itself; their
-    *    memoized-store siblings p138/p139/p141–p144 are probe-class).
-    *  - "training": per-rep model training in the registered path.
-    */
-  private val pricingClass: Map[String, String] = Map(
-    "p123_incremental_soft_dedup" -> "ingestion",
-    "p126_incremental_vector_labels" -> "ingestion",
-    "p127_incremental_video_labels" -> "ingestion",
-    "p128_incremental_audio_labels" -> "ingestion",
-    "p132_incremental_crossmodal" -> "ingestion",
-    "p136_retraction_labels" -> "retraction",
-    "p137_retraction_bm25" -> "retraction",
-    "p140_retraction_vector_labels" -> "retraction",
-    "p56_pq_trained" -> "training", // reclassified r15: trains per rep
-    "p69_bpe_merges" -> "training",
-    "p107_perceptron_pocket" -> "training",
-    "p124_ann_tuning_trained" -> "training",
-    "p145_drift_retrain_assignment" -> "training",
-  )
-
-  private def classOf(name: String): String =
-    pricingClass.getOrElse(name, "probe")
+  /** Each entry's [[Pricing]] class name, from its declaration. */
+  private val classOf: Map[String, String] =
+    SparkEntry.registry.map(s => s.name -> s.pricing.name).toMap
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      // AQE right-sizing (guide §2.2): honor the advisory partition
-      // size when coalescing instead of pinning every reduce stage at
-      // the core count — tiny intermediate shuffles collapse to one
-      // task; corpus-sized ones stay advisory-sized (64 MB default), so
-      // at 100 TB nothing coalesces below the cluster's parallelism.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = DriverSession()
     // Warm the session (codegen pools, file-listing threads, broadcast
     // infra) so the first measured query isn't charged for JVM init.
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -135,14 +88,14 @@ object Bench {
       .mkString("{", ",", "}")
     val ok = results.filter(_._2 >= 0)
     val total = ok.map(_._2).sum
-    // per-pricing-class totals (like-for-like diffing; see pricingClass)
+    // per-pricing-class totals (like-for-like diffing; see Pricing)
     // and the non-default tags themselves, so the artifact names which
     // keys sit in which class without repeating 200+ "probe" entries
     val classTotals = ok.groupBy { case (k, _) => classOf(k) }
       .toSeq.sortBy(_._1)
       .map { case (c, qs) => "\"" + c + "\":" + sec(qs.map(_._2).sum) }
       .mkString("{", ",", "}")
-    val classTags = pricingClass.toSeq.sorted
+    val classTags = classOf.toSeq.filter(_._2 != Pricing.Probe.name).sorted
       .map { case (k, c) => "\"" + k + "\":\"" + c + "\"" }
       .mkString("{", ",", "}")
     def line(qs: Seq[(String, Double)], tag: String): String =

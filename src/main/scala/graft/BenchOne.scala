@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev utility: time specific queries repeatedly, in one warm JVM, to
   * evaluate plan changes without whole-suite noise.
@@ -10,22 +9,7 @@ object BenchOne {
     val sfDir = args(0)
     val reps = args(1).toInt
     val names = args.drop(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      // AQE right-sizing (guide §2.2): honor the advisory partition
-      // size when coalescing instead of pinning every reduce stage at
-      // the core count — tiny intermediate shuffles collapse to one
-      // task; corpus-sized ones stay advisory-sized (64 MB default), so
-      // at 100 TB nothing coalesces below the cluster's parallelism.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = DriverSession()
     spark.range(1000).selectExpr("sum(id)").collect()
     for (name <- names; r <- 1 to reps) {
       val t0 = System.nanoTime()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: dump the formatted physical plan of one or all queries —
   * the feedback loop for pushdown/broadcast/shuffle auditing.
   * Usage: runMain graft.ExplainAll <sfDir> [queryName...]
@@ -11,12 +9,7 @@ object ExplainAll {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val names = if (args.length > 1) args.drop(1).toSeq
                 else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = DriverSession()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")

@@ -8,35 +8,28 @@ object SparkEntry {
     */
   def entry(spark: SparkSession): DataFrame =
     operators.Relational.q01PricingSummary(spark, "/root/testdata/sf0.001")
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    operators.Relational.queries ++ operators.Relational2.queries ++
-      operators.Relational3.queries ++ operators.Relational4.queries ++
-      operators.Relational5.queries ++ operators.Relational6.queries ++
-      operators.Relational7.queries ++ operators.Relational8.queries ++
-      operators.PipelineQueries.queries ++ operators.Pipeline2.queries ++
-      operators.Pipeline3.queries ++ operators.Pipeline4.queries ++
-      operators.Pipeline5.queries ++ operators.Pipeline6.queries ++
-      operators.Pipeline7.queries ++ operators.Pipeline8.queries ++
-      operators.Pipeline9.queries ++ operators.Pipeline10.queries ++
-      operators.Pipeline11.queries ++ operators.Pipeline12.queries ++
-      operators.Pipeline13.queries ++ operators.Pipeline14.queries ++
-      operators.Pipeline15.queries ++ operators.Pipeline16.queries ++
-      operators.Pipeline17.queries ++ operators.Pipeline18.queries
+
+  /** Every registered entry, each declared once in its operator object. */
+  val registry: Seq[QuerySpec] = {
+    import operators._
+    Seq(Relational.specs, Relational2.specs, Relational3.specs,
+      Relational4.specs, Relational5.specs, Relational6.specs,
+      Relational7.specs, Relational8.specs, PipelineQueries.specs,
+      Pipeline2.specs, Pipeline3.specs, Pipeline4.specs, Pipeline5.specs,
+      Pipeline6.specs, Pipeline7.specs, Pipeline8.specs, Pipeline9.specs,
+      Pipeline10.specs, Pipeline11.specs, Pipeline12.specs,
+      Pipeline13.specs, Pipeline14.specs, Pipeline15.specs,
+      Pipeline16.specs, Pipeline17.specs, Pipeline18.specs).flatten
+  }
+
+  /** The contract's query map: one entry per implemented operator from
+    * SURVEY.md §2, derived from [[registry]]. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(s => s.name -> s.build).toMap
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    operators.Relational.oracles ++ operators.Relational2.oracles ++
-      operators.Relational3.oracles ++ operators.Relational4.oracles ++
-      operators.Relational5.oracles ++ operators.Relational6.oracles ++
-      operators.Relational7.oracles ++ operators.Relational8.oracles ++
-      operators.PipelineQueries.oracles ++ operators.Pipeline2.oracles ++
-      operators.Pipeline3.oracles ++ operators.Pipeline4.oracles ++
-      operators.Pipeline5.oracles ++ operators.Pipeline6.oracles ++
-      operators.Pipeline7.oracles ++ operators.Pipeline8.oracles ++
-      operators.Pipeline9.oracles ++ operators.Pipeline10.oracles ++
-      operators.Pipeline11.oracles ++ operators.Pipeline12.oracles ++
-      operators.Pipeline13.oracles ++ operators.Pipeline14.oracles ++
-      operators.Pipeline15.oracles ++ operators.Pipeline16.oracles ++
-      operators.Pipeline17.oracles ++ operators.Pipeline18.oracles
+    * the same parquet tables, derived from [[registry]]; the rows-only
+    * entries (no SQL-expressible oracle) are absent. */
+  val oracleSql: Map[String, String] =
+    registry.flatMap(s => s.oracle.map(s.name -> _)).toMap
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.QuerySpec
 
 /** Pipeline operators, batch 10: the VIDEO modality — raw-PPM-stream
   * clips decoded to per-frame perceptual signatures, temporal
@@ -729,33 +730,23 @@ object Pipeline10 {
        |       bucket - n_tokens AS pad_waste
        |FROM b ORDER BY doc_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "p89_video_decode"   -> (videoDecode _),
-    "p90_video_near_dup" -> (videoNearDup _),
-    "p91_video_clusters" -> (videoDedupClusters _),
-    "p92_scene_cuts"     -> (sceneCuts _),
-    "p93_keyframes"      -> (keyframes _),
-    "p94_decontaminate"  -> (decontaminate _),
-    "p95_decontaminate_spans" -> (decontaminateSpans _),
-    "p96_cluster_sample" -> (clusterSample _),
-    "p99_clip_containment" -> (clipContainmentQuery _),
-    "p100_frame_probe_stored" -> (frameProbeStored _),
-    "p101_length_batching" -> (lengthBatching _),
-    "p97_frame_probe"    -> (frameProbe _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "p89_video_decode"   -> videoDecodeOracle,
-    "p90_video_near_dup" -> videoNearDupOracle,
-    "p91_video_clusters" -> videoDedupClustersOracle,
-    "p92_scene_cuts"     -> sceneCutsOracle,
-    "p93_keyframes"      -> keyframesOracle,
-    "p94_decontaminate"  -> decontaminateOracle,
-    "p95_decontaminate_spans" -> decontaminateSpansOracle,
-    "p96_cluster_sample" -> clusterSampleOracle,
-    "p99_clip_containment" -> clipContainmentOracle,
-    "p100_frame_probe_stored" -> frameProbeOracle,
-    "p101_length_batching" -> lengthBatchingOracle,
-    "p97_frame_probe"    -> frameProbeOracle,
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("p89_video_decode", videoDecode, Some(videoDecodeOracle)),
+    QuerySpec("p90_video_near_dup", videoNearDup, Some(videoNearDupOracle)),
+    QuerySpec("p91_video_clusters", videoDedupClusters,
+      Some(videoDedupClustersOracle)),
+    QuerySpec("p92_scene_cuts", sceneCuts, Some(sceneCutsOracle)),
+    QuerySpec("p93_keyframes", keyframes, Some(keyframesOracle)),
+    QuerySpec("p94_decontaminate", decontaminate, Some(decontaminateOracle)),
+    QuerySpec("p95_decontaminate_spans", decontaminateSpans,
+      Some(decontaminateSpansOracle)),
+    QuerySpec("p96_cluster_sample", clusterSample, Some(clusterSampleOracle)),
+    QuerySpec("p99_clip_containment", clipContainmentQuery,
+      Some(clipContainmentOracle)),
+    QuerySpec("p100_frame_probe_stored", frameProbeStored,
+      Some(frameProbeOracle)),
+    QuerySpec("p101_length_batching", lengthBatching,
+      Some(lengthBatchingOracle)),
+    QuerySpec("p97_frame_probe", frameProbe, Some(frameProbeOracle)),
   )
 }

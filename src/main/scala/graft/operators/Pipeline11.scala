@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.{Pricing, QuerySpec}
 
 /** Pipeline operators, batch 11: LEARNED filters — a linear classifier
   * trained relationally with EXACT integer arithmetic (batch
@@ -424,15 +425,11 @@ object Pipeline11 {
        |       CAST((rank - 1) // $PhaseSize AS INTEGER) AS phase
        |FROM r ORDER BY doc_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "p102_perceptron_quality" -> (perceptronQuality _),
-    "p103_curriculum" -> (curriculumPhases _),
-    "p107_perceptron_pocket" -> (perceptronQualityPocket _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "p102_perceptron_quality" -> perceptronOracle,
-    "p103_curriculum" -> curriculumOracle,
-    "p107_perceptron_pocket" -> perceptronPocketOracle,
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("p102_perceptron_quality", perceptronQuality,
+      Some(perceptronOracle)),
+    QuerySpec("p103_curriculum", curriculumPhases, Some(curriculumOracle)),
+    QuerySpec("p107_perceptron_pocket", perceptronQualityPocket,
+      Some(perceptronPocketOracle), Pricing.Training),
   )
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.QuerySpec
 
 /** Pipeline operators, batch 12 (round 9): index-quality metrics and
   * the remaining cross-modal/serving compositions — the ANN recall
@@ -1182,35 +1183,27 @@ object Pipeline12 {
        |ORDER BY doc_id, w_start""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "p104_ann_recall" -> (annRecall _),
-    "p105_audio_containment" -> (audioContainmentQuery _),
-    "p106_release_plan" -> (releasePlan _),
-    "p108_lsh_quality" -> (lshQuality _),
-    "p109_minhash_estimate" -> (minhashEstimate _),
-    "p110_audio_probe_stored" -> (audioProbeStored _),
-    "p111_lsh_probe_stored" -> (lshProbeStoredQuery _),
-    "p112_embedding_drift" -> (embeddingDrift _),
-    "p113_release_card" -> (releaseCard _),
-    "p114_boilerplate_spans" -> (boilerplateSpans _),
-    "p115_semdedup_stored" -> (semDedupStored _),
-    "p116_ann_tuning" -> (annTuning _),
-    "p117_lsh_verified_stored" -> (lshVerifiedStored _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "p104_ann_recall" -> annRecallOracle,
-    "p105_audio_containment" -> audioContainmentOracle,
-    "p106_release_plan" -> releasePlanOracle,
-    "p108_lsh_quality" -> lshQualityOracle,
-    "p109_minhash_estimate" -> minhashEstimateOracle,
-    "p110_audio_probe_stored" -> audioProbeStoredOracle,
-    "p111_lsh_probe_stored" -> lshProbeStoredOracle,
-    "p112_embedding_drift" -> embeddingDriftOracle,
-    "p113_release_card" -> releaseCardOracle,
-    "p114_boilerplate_spans" -> boilerplateSpansOracle,
-    "p115_semdedup_stored" -> semDedupStoredOracle,
-    "p116_ann_tuning" -> annTuningOracle,
-    "p117_lsh_verified_stored" -> lshVerifiedStoredOracle,
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("p104_ann_recall", annRecall, Some(annRecallOracle)),
+    QuerySpec("p105_audio_containment", audioContainmentQuery,
+      Some(audioContainmentOracle)),
+    QuerySpec("p106_release_plan", releasePlan, Some(releasePlanOracle)),
+    QuerySpec("p108_lsh_quality", lshQuality, Some(lshQualityOracle)),
+    QuerySpec("p109_minhash_estimate", minhashEstimate,
+      Some(minhashEstimateOracle)),
+    QuerySpec("p110_audio_probe_stored", audioProbeStored,
+      Some(audioProbeStoredOracle)),
+    QuerySpec("p111_lsh_probe_stored", lshProbeStoredQuery,
+      Some(lshProbeStoredOracle)),
+    QuerySpec("p112_embedding_drift", embeddingDrift,
+      Some(embeddingDriftOracle)),
+    QuerySpec("p113_release_card", releaseCard, Some(releaseCardOracle)),
+    QuerySpec("p114_boilerplate_spans", boilerplateSpans,
+      Some(boilerplateSpansOracle)),
+    QuerySpec("p115_semdedup_stored", semDedupStored,
+      Some(semDedupStoredOracle)),
+    QuerySpec("p116_ann_tuning", annTuning, Some(annTuningOracle)),
+    QuerySpec("p117_lsh_verified_stored", lshVerifiedStored,
+      Some(lshVerifiedStoredOracle)),
   )
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.QuerySpec
 
 /** Pipeline operators, batch 13: the DECISION layer on top of the
   * dedup and classifier devices — soft-dedup sampling weights (keep
@@ -444,19 +445,15 @@ object Pipeline13 {
   def scoreBandRates(docs: DataFrame, weights: DataFrame): DataFrame =
     bandRates(docs, weights, "cb", "rb")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "p118_soft_dedup" -> (softDedupWeights _),
-    "p119_calibration" -> (calibrationBands _),
-    "p120_soft_dedup_sample" -> (softDedupSample _),
-    "p121_token_yield" -> (tokenYield _),
-    "p122_threshold_curve" -> (thresholdCurve _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "p118_soft_dedup" -> softDedupWeightsOracle,
-    "p119_calibration" -> calibrationBandsOracle,
-    "p120_soft_dedup_sample" -> softDedupSampleOracle,
-    "p121_token_yield" -> tokenYieldOracle,
-    "p122_threshold_curve" -> thresholdCurveOracle,
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("p118_soft_dedup", softDedupWeights,
+      Some(softDedupWeightsOracle)),
+    QuerySpec("p119_calibration", calibrationBands,
+      Some(calibrationBandsOracle)),
+    QuerySpec("p120_soft_dedup_sample", softDedupSample,
+      Some(softDedupSampleOracle)),
+    QuerySpec("p121_token_yield", tokenYield, Some(tokenYieldOracle)),
+    QuerySpec("p122_threshold_curve", thresholdCurve,
+      Some(thresholdCurveOracle)),
   )
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.{Pricing, QuerySpec}
 
 /** Pipeline operators, batch 14: the MAINTENANCE layer of the decision
   * devices batch 13 introduced — incremental cluster/weight upkeep
@@ -119,9 +120,7 @@ object Pipeline14 {
     */
   private[operators] def textStoreRoot(s: SparkSession, d: String): String =
     IndexStores.of("inc_text_store", d) { p =>
-      withScratch(s, s"$p/labels", s"$p/lsh") {
-        foldIncrementalLabels(s, d, s"$p/labels", s"$p/lsh")
-      }
+      foldIncrementalLabels(s, d, s"$p/labels", s"$p/lsh")
     }
 
   /** Lloyd rounds of the registered frozen-trained method — fixed (no
@@ -396,13 +395,6 @@ object Pipeline14 {
        |FROM lab ORDER BY vec_id""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "p123_incremental_soft_dedup" -> (incrementalSoftDedup _),
-    "p124_ann_tuning_trained" -> (annTuningTrained _),
-    "p125_video_soft_dedup" -> (videoSoftDedupYield _),
-    "p126_incremental_vector_labels" -> (incrementalVectorLabels _),
-  )
-
   /** p124 oracle: the frozen Lloyd chain re-derived from first
     * principles — per round, the argmax assignment (the registered p13
     * CTE device) and the exact integer micro-mean (`sum(round(v·10⁶))`
@@ -528,13 +520,15 @@ object Pipeline14 {
        |ORDER BY method, nprobe""".stripMargin
   }
 
-  val oracles: Map[String, String] = Map(
-    // p118's from-scratch oracle VERBATIM — the append-equals-rebuild
-    // differential: the incremental path must land bit-identically on
-    // the full-corpus contraction
-    "p123_incremental_soft_dedup" -> Pipeline13.softDedupWeightsOracle,
-    "p124_ann_tuning_trained" -> annTuningTrainedOracle,
-    "p125_video_soft_dedup" -> videoSoftDedupYieldOracle,
-    "p126_incremental_vector_labels" -> incrementalVectorLabelsOracle,
+  val specs: Seq[QuerySpec] = Seq(
+    // p118's from-scratch oracle verbatim: append equals rebuild
+    QuerySpec("p123_incremental_soft_dedup", incrementalSoftDedup,
+      Some(Pipeline13.softDedupWeightsOracle), Pricing.Ingestion),
+    QuerySpec("p124_ann_tuning_trained", annTuningTrained,
+      Some(annTuningTrainedOracle), Pricing.Training),
+    QuerySpec("p125_video_soft_dedup", videoSoftDedupYield,
+      Some(videoSoftDedupYieldOracle)),
+    QuerySpec("p126_incremental_vector_labels", incrementalVectorLabels,
+      Some(incrementalVectorLabelsOracle), Pricing.Ingestion),
   )
 }

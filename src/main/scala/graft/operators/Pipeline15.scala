@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.{Pricing, QuerySpec}
 
 /** Pipeline operators, batch 15: incremental label/weight maintenance
   * extended to the remaining two modalities — VIDEO clip-cluster
@@ -109,6 +110,14 @@ object Pipeline15 {
     }
   }
 
+  /** The live video store pair (labels + banded frames) p127's fold
+    * loop leaves, built once per JVM per dataset; p130 and p131 read it.
+    */
+  private def videoStoreRoot(s: SparkSession, d: String): String =
+    IndexStores.of("inc_video_store", d) { p =>
+      foldIncrementalVideoLabels(s, d, s"$p/labels", s"$p/frames")
+    }
+
   /** p130: the VIDEO frame-yield table refreshed from the LIVE stores —
     * p125's budgeting output (per source: clip count, raw frame mass,
     * effective micro-frames after clip-family down-weighting, retention
@@ -129,14 +138,7 @@ object Pipeline15 {
     * land bit-identically on the from-scratch yield table.
     */
   def videoYieldFromStore(s: SparkSession, d: String): DataFrame = {
-    val root = IndexStores.of("inc_video_store", d) { p =>
-      // withScratch so a mid-fold failure deletes the partial store pair
-      // instead of leaking it per Bench rep (the incrementalReleaseRefresh
-      // discipline — Bench catches per-rep exceptions and re-runs)
-      Pipeline14.withScratch(s, s"$p/labels", s"$p/frames") {
-        foldIncrementalVideoLabels(s, d, s"$p/labels", s"$p/frames")
-      }
-    }
+    val root = videoStoreRoot(s, d)
     val nfr = s.read.parquet(s"$root/frames")
       .filter(col("band_i") === 0)
       .groupBy(col("doc_id"))
@@ -317,11 +319,7 @@ object Pipeline15 {
     * own constant.
     */
   def incrementalVideoRelease(s: SparkSession, d: String): DataFrame = {
-    val root = IndexStores.of("inc_video_store", d) { p =>
-      Pipeline14.withScratch(s, s"$p/labels", s"$p/frames") {
-        foldIncrementalVideoLabels(s, d, s"$p/labels", s"$p/frames")
-      }
-    }
+    val root = videoStoreRoot(s, d)
     Pipeline13.softDedupSampleOf(
         LabelStore.weightsFromStore(s, s"$root/labels"), RefreshEpochs)
       .orderBy(col("epoch"), col("doc_id"))
@@ -331,23 +329,20 @@ object Pipeline15 {
     s"""WITH RECURSIVE ${Pipeline10.videoClusterLabelCtes},
        |${Pipeline13.releaseDrawTail}""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "p127_incremental_video_labels" -> (incrementalVideoLabels _),
-    "p128_incremental_audio_labels" -> (incrementalAudioLabels _),
-    "p129_incremental_release" -> (incrementalReleaseRefresh _),
-    "p130_video_yield_live" -> (videoYieldFromStore _),
-    "p131_video_release_live" -> (incrementalVideoRelease _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "p127_incremental_video_labels" -> incrementalVideoLabelsOracle,
-    "p128_incremental_audio_labels" -> incrementalAudioLabelsOracle,
-    // p120's from-scratch oracle VERBATIM — the append-equals-rebuild
-    // differential extended through the downstream release draw
-    "p129_incremental_release" -> Pipeline13.softDedupSampleOracle,
-    // p125's from-scratch oracle VERBATIM — the live refresh must land
-    // bit-identically on the recomputed yield table
-    "p130_video_yield_live" -> Pipeline14.videoSoftDedupYieldOracle,
-    "p131_video_release_live" -> incrementalVideoReleaseOracle,
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("p127_incremental_video_labels", incrementalVideoLabels,
+      Some(incrementalVideoLabelsOracle), Pricing.Ingestion),
+    QuerySpec("p128_incremental_audio_labels", incrementalAudioLabels,
+      Some(incrementalAudioLabelsOracle), Pricing.Ingestion),
+    // p120's from-scratch oracle verbatim: append equals rebuild,
+    // through the downstream release draw
+    QuerySpec("p129_incremental_release", incrementalReleaseRefresh,
+      Some(Pipeline13.softDedupSampleOracle)),
+    // p125's from-scratch oracle verbatim: the live refresh equals the
+    // recomputed yield table
+    QuerySpec("p130_video_yield_live", videoYieldFromStore,
+      Some(Pipeline14.videoSoftDedupYieldOracle)),
+    QuerySpec("p131_video_release_live", incrementalVideoRelease,
+      Some(incrementalVideoReleaseOracle)),
   )
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.{Pricing, QuerySpec}
 
 /** Pipeline operators, batch 16: the LIVE twins of the text decision
   * tables — p121's token-yield budgeting table (p133) and p113's
@@ -236,10 +237,8 @@ object Pipeline16 {
   private def crossModalStoreRoot(s: SparkSession, d: String): String =
     IndexStores.of("inc_xmodal_store", d) { p =>
       val dirs = Seq("labels", "txt", "img", "aud", "vid").map(t => s"$p/$t")
-      Pipeline14.withScratch(s, dirs: _*) {
-        foldIncrementalCrossModalLabels(s, d, dirs(0), dirs(1), dirs(2),
-          dirs(3), dirs(4))
-      }
+      foldIncrementalCrossModalLabels(s, d, dirs(0), dirs(1), dirs(2),
+        dirs(3), dirs(4))
     }
 
   /** p135: the incremental RELEASE draw over the CROSS-MODAL label
@@ -349,14 +348,6 @@ object Pipeline16 {
     s"""WITH RECURSIVE $survivorLabelCtes
        |SELECT doc_id, canonical FROM lab ORDER BY doc_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "p132_incremental_crossmodal" -> (incrementalCrossModalLabels _),
-    "p135_crossmodal_release_live" -> (incrementalCrossModalRelease _),
-    "p136_retraction_labels" -> (retractionLabels _),
-    "p133_token_yield_live" -> (tokenYieldLive _),
-    "p134_release_card_live" -> (releaseCardLive _),
-  )
-
   /** p135 oracle: p85's from-scratch label CTEs under p120's weight +
     * draw CTEs — the chained differential over the third label space
     * (the p131 pattern on the cross-modal families), epoch grid from
@@ -366,22 +357,23 @@ object Pipeline16 {
     s"""WITH RECURSIVE ${Pipeline9.multimodalLabelCtes},
        |${Pipeline13.releaseDrawTail}""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    // p85's from-scratch cross-modal oracle VERBATIM — the unified
-    // live fold must land bit-identically on the four-modality
-    // contraction of the union corpus (append-equals-rebuild for the
-    // cross-modal label space)
-    "p132_incremental_crossmodal" -> Pipeline9.multimodalDedupOracle,
-    "p135_crossmodal_release_live" -> incrementalCrossModalReleaseOracle,
-    // remove-equals-rebuild under the full differential: the
-    // post-removal store must hash-match the from-scratch contraction
-    // of the surviving corpus
-    "p136_retraction_labels" -> retractionLabelsOracle,
-    // p121's from-scratch oracle VERBATIM — live weights must reproduce
-    // the recomputed yield table bit-identically
-    "p133_token_yield_live" -> Pipeline13.tokenYieldOracle,
-    // p113's from-scratch oracle VERBATIM — the store-derived pair
-    // matrix must reproduce the recomputed card bit-identically
-    "p134_release_card_live" -> Pipeline12.releaseCardOracle,
+  val specs: Seq[QuerySpec] = Seq(
+    // p85's from-scratch oracle verbatim: append equals rebuild for the
+    // cross-modal label space
+    QuerySpec("p132_incremental_crossmodal", incrementalCrossModalLabels,
+      Some(Pipeline9.multimodalDedupOracle), Pricing.Ingestion),
+    QuerySpec("p135_crossmodal_release_live", incrementalCrossModalRelease,
+      Some(incrementalCrossModalReleaseOracle)),
+    // remove equals rebuild: the from-scratch contraction of survivors
+    QuerySpec("p136_retraction_labels", retractionLabels,
+      Some(retractionLabelsOracle), Pricing.Retraction),
+    // p121's from-scratch oracle verbatim: live weights reproduce the
+    // recomputed yield table
+    QuerySpec("p133_token_yield_live", tokenYieldLive,
+      Some(Pipeline13.tokenYieldOracle)),
+    // p113's from-scratch oracle verbatim: the store-derived pair
+    // matrix reproduces the recomputed card
+    QuerySpec("p134_release_card_live", releaseCardLive,
+      Some(Pipeline12.releaseCardOracle)),
   )
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.{Pricing, QuerySpec}
 
 /** Pipeline operators, batch 17: RETRACTION REACHES RETRIEVAL AND THE
   * RELEASE. p136 proved the label-store takedown
@@ -88,6 +89,33 @@ object Pipeline17 {
        |SELECT doc_id, round(score, 4) AS bm25, rnk
        |FROM top WHERE rnk <= 20 ORDER BY rnk""".stripMargin
 
+  /** The one build behind the text memos: the full-corpus label table
+    * + LSH signature store of memo `family`, built once per JVM per
+    * dataset, then `takedown(spark, lsh, labels, ids)` over the
+    * [[retractIds]] documents and, with `compact`, the banded store's
+    * applying compaction.
+    */
+  private def textTakedownRoot(s: SparkSession, d: String, family: String,
+      takedown: (SparkSession, String, String, DataFrame) => Long,
+      compact: Boolean = false): String =
+    IndexStores.of(family, d) { p =>
+      val docs = documents(s, d).select(col("doc_id"), col("text"))
+      Dedup.lshStoreWrite(
+        Dedup.lshSignatureRows(docs, "doc_id", "text",
+          n = PipelineQueries.ShingleN, numHashes = 16, bands = 4),
+        s"$p/lsh")
+      LabelStore.write(
+        Dedup.dedupClusters(docs, "doc_id",
+          Dedup.minhashLshPairs(docs, "doc_id", "text",
+            n = PipelineQueries.ShingleN, numHashes = 16, bands = 4)),
+        s"$p/labels")
+      takedown(s, s"$p/lsh", s"$p/labels", retractIds(docs))
+      if (compact) {
+        Dedup.lshStoreCompact(s, s"$p/lsh", s"$p/lsh__compact")
+        graft.streaming.StreamingOps.swapInCompacted(s, s"$p/lsh")
+      }
+    }
+
   /** The post-retraction TEXT store pair, built ONCE per JVM per
     * dataset (the IndexStores memo): the live label table + LSH
     * signature store over the full corpus, then the composed text
@@ -97,22 +125,8 @@ object Pipeline17 {
     * this memo serves the DOWNSTREAM refresh p138 prices.
     */
   private def retractedTextRoot(s: SparkSession, d: String): String =
-    IndexStores.of("retract_text_store", d) { p =>
-      val docs = documents(s, d).select(col("doc_id"), col("text"))
-      Pipeline14.withScratch(s, s"$p/labels", s"$p/lsh") {
-        Dedup.lshStoreWrite(
-          Dedup.lshSignatureRows(docs, "doc_id", "text",
-            n = PipelineQueries.ShingleN, numHashes = 16, bands = 4),
-          s"$p/lsh")
-        LabelStore.write(
-          Dedup.dedupClusters(docs, "doc_id",
-            Dedup.minhashLshPairs(docs, "doc_id", "text",
-              n = PipelineQueries.ShingleN, numHashes = 16, bands = 4)),
-          s"$p/labels")
-        graft.streaming.StreamingOps.dedupRetractBatch(
-          s, s"$p/lsh", s"$p/labels")(retractIds(docs))
-      }
-    }
+    textTakedownRoot(s, d, "retract_text_store",
+      graft.streaming.StreamingOps.dedupRetractBatch(_, _, _)(_))
 
   /** p138: the POST-RETRACTION release draw — takedown composed with
     * the release chain: live weights from the post-removal label table
@@ -157,22 +171,8 @@ object Pipeline17 {
     * check the tombstoned state itself.
     */
   private def deferredTextRoot(s: SparkSession, d: String): String =
-    IndexStores.of("defer_text_store", d) { p =>
-      val docs = documents(s, d).select(col("doc_id"), col("text"))
-      Pipeline14.withScratch(s, s"$p/labels", s"$p/lsh") {
-        Dedup.lshStoreWrite(
-          Dedup.lshSignatureRows(docs, "doc_id", "text",
-            n = PipelineQueries.ShingleN, numHashes = 16, bands = 4),
-          s"$p/lsh")
-        LabelStore.write(
-          Dedup.dedupClusters(docs, "doc_id",
-            Dedup.minhashLshPairs(docs, "doc_id", "text",
-              n = PipelineQueries.ShingleN, numHashes = 16, bands = 4)),
-          s"$p/labels")
-        graft.streaming.StreamingOps.dedupRetractDeferred(
-          s, s"$p/lsh", s"$p/labels")(retractIds(docs))
-      }
-    }
+    textTakedownRoot(s, d, "defer_text_store",
+      graft.streaming.StreamingOps.dedupRetractDeferred(_, _, _)(_))
 
   /** p139: the TOMBSTONE-AWARE reader under the full differential —
     * the deferred takedown's correctness rests entirely on every
@@ -385,24 +385,9 @@ object Pipeline17 {
     * p147, the banded twin of p146.
     */
   private def compactedTextRoot(s: SparkSession, d: String): String =
-    IndexStores.of("defcmp_text_store", d) { p =>
-      val docs = documents(s, d).select(col("doc_id"), col("text"))
-      Pipeline14.withScratch(s, s"$p/labels", s"$p/lsh") {
-        Dedup.lshStoreWrite(
-          Dedup.lshSignatureRows(docs, "doc_id", "text",
-            n = PipelineQueries.ShingleN, numHashes = 16, bands = 4),
-          s"$p/lsh")
-        LabelStore.write(
-          Dedup.dedupClusters(docs, "doc_id",
-            Dedup.minhashLshPairs(docs, "doc_id", "text",
-              n = PipelineQueries.ShingleN, numHashes = 16, bands = 4)),
-          s"$p/labels")
-        graft.streaming.StreamingOps.dedupRetractDeferred(
-          s, s"$p/lsh", s"$p/labels")(retractIds(docs))
-        Dedup.lshStoreCompact(s, s"$p/lsh", s"$p/lsh__compact")
-        graft.streaming.StreamingOps.swapInCompacted(s, s"$p/lsh")
-      }
-    }
+    textTakedownRoot(s, d, "defcmp_text_store",
+      graft.streaming.StreamingOps.dedupRetractDeferred(_, _, _)(_),
+      compact = true)
 
   /** p147: the POST-COMPACTION banded state — p139's differential on
     * the other end of the banded lifecycle: after the compaction
@@ -436,20 +421,18 @@ object Pipeline17 {
       val emb = embeddings(s, d).select(col("vec_id"), col("embedding"))
         .localCheckpoint()
       val cents = Similarity.seedCentroids(emb, 8)
-      Pipeline14.withScratch(s, s"$p/ivf", s"$p/labels") {
-        Similarity.ivfWrite(emb, cents, s"$p/ivf")
-        LabelStore.write(
-          LabelStore.labelsFor(emb.select(col("vec_id").as("doc_id")),
-            Similarity.cellBlockedTauPairs(emb, cents, Pipeline14.VecTau,
-              nProbe = cents.length)),
-          s"$p/labels")
-        graft.streaming.StreamingOps.vectorRetractDeferred(
-          s, s"$p/ivf", s"$p/labels", cents, Pipeline14.VecTau,
-          nProbe = cents.length)(
-          emb.filter(pmod(col("vec_id"), lit(Pipeline16.RetractMod))
-              === Pipeline16.RetractRem)
-            .select(col("vec_id")))
-      }
+      Similarity.ivfWrite(emb, cents, s"$p/ivf")
+      LabelStore.write(
+        LabelStore.labelsFor(emb.select(col("vec_id").as("doc_id")),
+          Similarity.cellBlockedTauPairs(emb, cents, Pipeline14.VecTau,
+            nProbe = cents.length)),
+        s"$p/labels")
+      graft.streaming.StreamingOps.vectorRetractDeferred(
+        s, s"$p/ivf", s"$p/labels", cents, Pipeline14.VecTau,
+        nProbe = cents.length)(
+        emb.filter(pmod(col("vec_id"), lit(Pipeline16.RetractMod))
+            === Pipeline16.RetractRem)
+          .select(col("vec_id")))
     }
 
   /** p151: the TOMBSTONE-AWARE ANN read — the deferred VECTOR
@@ -492,46 +475,28 @@ object Pipeline17 {
       .orderBy(col("doc_id"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "p137_retraction_bm25" -> (retractionBm25 _),
-    "p151_deferred_retraction_vector_labels" ->
-      (deferredRetractionVectorLabels _),
-    "p141_deferred_retraction_bm25" -> (deferredRetractionBm25 _),
-    "p146_compacted_retraction_bm25" -> (compactedRetractionBm25 _),
-    "p147_compacted_retraction_pairs" -> (compactedRetractionPairs _),
-    "p138_retraction_release_live" -> (retractionRelease _),
-    "p139_deferred_retraction_pairs" -> (deferredRetractionPairs _),
-    "p140_retraction_vector_labels" -> (retractionVectorLabels _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    // from-scratch BM25 over the surviving corpus: rows gone, survivors
-    // intact, idf/avgdl decremented exactly
-    "p137_retraction_bm25" -> retractionBm25Oracle,
-    // the same from-scratch survivor index, now matched by the
-    // TOMBSTONE-AWARE read over the deferred state (rows physically
-    // present, only queued) — p139's differential for the lexical store
-    "p141_deferred_retraction_bm25" -> retractionBm25Oracle,
-    // ...and matched again AFTER the applying compaction (rows gone,
-    // zone retired) — the oracle on the tombstone-aware compactor
-    "p146_compacted_retraction_bm25" -> retractionBm25Oracle,
-    // the banded twin: the pair relation after the compaction applies
-    // the queued tombstones = the from-scratch survivor pairs
-    "p147_compacted_retraction_pairs" -> deferredRetractionPairsOracle,
-    // from-scratch labels + weights + draw over the surviving corpus:
-    // withdrawn docs never drawn, survivors drawn at raised weights
-    "p138_retraction_release_live" -> retractionReleaseOracle,
-    // the tombstone-aware read differential: pairs from the deferred
-    // store state = the from-scratch pair relation over survivors
-    "p139_deferred_retraction_pairs" -> deferredRetractionPairsOracle,
-    // remove-equals-rebuild on the VECTOR label space: the
-    // post-removal store = the from-scratch τ-contraction of the
-    // surviving vectors
-    "p140_retraction_vector_labels" -> retractionVectorLabelsOracle,
-    // the same from-scratch survivor contraction, now recomputed from
-    // TOMBSTONE-AWARE store reads over the deferred state (rows
-    // physically present, only queued) — p139/p141's differential for
-    // the cell-partitioned vector family
-    "p151_deferred_retraction_vector_labels" -> retractionVectorLabelsOracle,
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("p137_retraction_bm25", retractionBm25,
+      Some(retractionBm25Oracle), Pricing.Retraction),
+    // p140's survivor oracle, matched by tombstone-aware reads of the
+    // deferred vector store
+    QuerySpec("p151_deferred_retraction_vector_labels",
+      deferredRetractionVectorLabels, Some(retractionVectorLabelsOracle)),
+    // p137's survivor oracle, matched by the tombstone-aware read of the
+    // deferred lexical store
+    QuerySpec("p141_deferred_retraction_bm25", deferredRetractionBm25,
+      Some(retractionBm25Oracle)),
+    // ...and again after the applying compaction
+    QuerySpec("p146_compacted_retraction_bm25", compactedRetractionBm25,
+      Some(retractionBm25Oracle)),
+    // p139's survivor pairs, after the compaction applies the tombstones
+    QuerySpec("p147_compacted_retraction_pairs", compactedRetractionPairs,
+      Some(deferredRetractionPairsOracle)),
+    QuerySpec("p138_retraction_release_live", retractionRelease,
+      Some(retractionReleaseOracle)),
+    QuerySpec("p139_deferred_retraction_pairs", deferredRetractionPairs,
+      Some(deferredRetractionPairsOracle)),
+    QuerySpec("p140_retraction_vector_labels", retractionVectorLabels,
+      Some(retractionVectorLabelsOracle), Pricing.Retraction),
   )
 }

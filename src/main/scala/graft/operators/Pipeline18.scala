@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.{Pricing, QuerySpec}
 
 /** Pipeline operators, batch 18: the retraction family COMPLETED
   * across label spaces. p136/p140 proved remove-equals-rebuild for the
@@ -62,6 +63,51 @@ object Pipeline18 {
     */
   private def releaseDrawTail: String = Pipeline13.releaseDrawTail
 
+  /** The one build behind the video memos: the full-corpus banded
+    * frame store + clip-family label table of memo `family`, built once
+    * per JVM per dataset from one decode pass (the p125 discipline),
+    * then `takedown(spark, frames, labels, ids)` over the retracted
+    * documents.
+    */
+  private def videoTakedownRoot(s: SparkSession, d: String, family: String,
+      takedown: (SparkSession, String, String, DataFrame) => Long): String =
+    IndexStores.of(family, d) { p =>
+      val docs = documents(s, d)
+      val frames = Multimodal.decodeVideoFrames(Multimodal.attachVideo(docs))
+        .select(col("doc_id"), col("frame"), col("n_frames"), col("fhash"))
+        .localCheckpoint()
+      Multimodal.frameStoreWrite(
+        frames.select(col("doc_id"), col("frame"), col("fhash")),
+        s"$p/frames")
+      graft.operators.LabelStore.write(
+        Pipeline10.videoClusterLabelsOf(docs, frames), s"$p/labels")
+      takedown(s, s"$p/frames", s"$p/labels", Pipeline17.retractIds(docs))
+    }
+
+  /** The one build behind the audio memos: the full-corpus one-frame
+    * fingerprint store + track-family label table of memo `family`
+    * (p128's store shape), built once per JVM per dataset, then
+    * `takedown(spark, fp, labels, ids)` over the retracted documents.
+    */
+  private def audioTakedownRoot(s: SparkSession, d: String, family: String,
+      takedown: (SparkSession, String, String, DataFrame) => Long): String =
+    IndexStores.of(family, d) { p =>
+      val docs = documents(s, d)
+      val af = Multimodal.decodeWave(Multimodal.attachWave(docs))
+        .select(col("doc_id"), col("afp")).localCheckpoint()
+      Multimodal.frameStoreWrite(
+        af.select(col("doc_id"), lit(0).as("frame"),
+          col("afp").as("fhash")), s"$p/fp")
+      LabelStore.write(
+        LabelStore.labelsFor(af.select(col("doc_id")),
+          Multimodal.perceptualNearDupPairs(
+              af.select(col("doc_id"), col("afp").as("dhash")),
+              maxHamming = 3)
+            .select(col("d1"), col("d2"))),
+        s"$p/labels")
+      takedown(s, s"$p/fp", s"$p/labels", Pipeline17.retractIds(docs))
+    }
+
   /** The post-retraction VIDEO store pair, built once per JVM per
     * dataset: banded frame store + clip-family label table over the
     * full corpus, then the composed video takedown
@@ -72,21 +118,8 @@ object Pipeline18 {
     * refresh p142 prices.
     */
   private def retractedVideoRoot(s: SparkSession, d: String): String =
-    IndexStores.of("retract_video_store", d) { p =>
-      val docs = documents(s, d)
-      Pipeline14.withScratch(s, s"$p/labels", s"$p/frames") {
-        val frames = Multimodal.decodeVideoFrames(Multimodal.attachVideo(docs))
-          .select(col("doc_id"), col("frame"), col("n_frames"), col("fhash"))
-          .localCheckpoint()
-        Multimodal.frameStoreWrite(
-          frames.select(col("doc_id"), col("frame"), col("fhash")),
-          s"$p/frames")
-        graft.operators.LabelStore.write(
-          Pipeline10.videoClusterLabelsOf(docs, frames), s"$p/labels")
-        graft.streaming.StreamingOps.videoRetractBatch(
-          s, s"$p/frames", s"$p/labels")(Pipeline17.retractIds(docs))
-      }
-    }
+    videoTakedownRoot(s, d, "retract_video_store",
+      graft.streaming.StreamingOps.videoRetractBatch(_, _, _)(_))
 
   /** p142: the POST-RETRACTION release draw over the VIDEO label space
     * — p138's composed chain (takedown handler → live weights → p120's
@@ -126,21 +159,8 @@ object Pipeline18 {
     * store family: p149 exists to check the tombstoned state itself.
     */
   private def deferredVideoRoot(s: SparkSession, d: String): String =
-    IndexStores.of("defer_video_store", d) { p =>
-      val docs = documents(s, d)
-      Pipeline14.withScratch(s, s"$p/labels", s"$p/frames") {
-        val frames = Multimodal.decodeVideoFrames(Multimodal.attachVideo(docs))
-          .select(col("doc_id"), col("frame"), col("n_frames"), col("fhash"))
-          .localCheckpoint()
-        Multimodal.frameStoreWrite(
-          frames.select(col("doc_id"), col("frame"), col("fhash")),
-          s"$p/frames")
-        graft.operators.LabelStore.write(
-          Pipeline10.videoClusterLabelsOf(docs, frames), s"$p/labels")
-        graft.streaming.StreamingOps.videoRetractDeferred(
-          s, s"$p/frames", s"$p/labels")(Pipeline17.retractIds(docs))
-      }
-    }
+    videoTakedownRoot(s, d, "defer_video_store",
+      graft.streaming.StreamingOps.videoRetractDeferred(_, _, _)(_))
 
   /** p149: the TOMBSTONE-AWARE video pair read — p139's differential
     * on the second banded store family: between a deferred video
@@ -182,25 +202,8 @@ object Pipeline18 {
     * then [[graft.streaming.StreamingOps.audioRetractDeferred]].
     */
   private def deferredAudioRoot(s: SparkSession, d: String): String =
-    IndexStores.of("defer_audio_store", d) { p =>
-      val docs = documents(s, d)
-      Pipeline14.withScratch(s, s"$p/labels", s"$p/fp") {
-        val af = Multimodal.decodeWave(Multimodal.attachWave(docs))
-          .select(col("doc_id"), col("afp")).localCheckpoint()
-        Multimodal.frameStoreWrite(
-          af.select(col("doc_id"), lit(0).as("frame"),
-            col("afp").as("fhash")), s"$p/fp")
-        LabelStore.write(
-          LabelStore.labelsFor(af.select(col("doc_id")),
-            Multimodal.perceptualNearDupPairs(
-                af.select(col("doc_id"), col("afp").as("dhash")),
-                maxHamming = 3)
-              .select(col("d1"), col("d2"))),
-          s"$p/labels")
-        graft.streaming.StreamingOps.audioRetractDeferred(
-          s, s"$p/fp", s"$p/labels")(Pipeline17.retractIds(docs))
-      }
-    }
+    audioTakedownRoot(s, d, "defer_audio_store",
+      graft.streaming.StreamingOps.audioRetractDeferred(_, _, _)(_))
 
   /** p150: the TOMBSTONE-AWARE audio pair read — the last member of
     * the deferred-read oracle family (text p139/p147, lexical
@@ -248,41 +251,39 @@ object Pipeline18 {
   private def retractedXmodalRoot(s: SparkSession, d: String): String =
     IndexStores.of("retract_xmodal_store", d) { p =>
       val dirs = Seq("labels", "txt", "img", "aud", "vid").map(t => s"$p/$t")
-      Pipeline14.withScratch(s, dirs: _*) {
-        val docs = documents(s, d)
-        val tf = Pipeline9.exactTextSigFrames(docs).localCheckpoint()
-        val dh = Multimodal.decodeRaster(Multimodal.attachRaster(docs))
-          .select(col("doc_id"), col("dhash")).localCheckpoint()
-        val af = Multimodal.decodeWave(Multimodal.attachWave(docs))
-          .select(col("doc_id"), col("afp")).localCheckpoint()
-        val vf = Multimodal.decodeVideoFrames(Multimodal.attachVideo(docs))
-          .select(col("doc_id"), col("frame"), col("n_frames"), col("fhash"))
-          .localCheckpoint()
-        val pairs = Pipeline9.exactTextPairsOf(docs)
-          .union(Multimodal.perceptualNearDupPairs(dh, maxHamming = 3)
-            .select(col("d1"), col("d2")))
-          .union(Multimodal.perceptualNearDupPairs(
-              af.select(col("doc_id"), col("afp").as("dhash")),
-              maxHamming = 3)
-            .select(col("d1"), col("d2")))
-          .union(Multimodal.videoNearDupPairs(vf, maxHamming = 3)
-            .select(col("d1"), col("d2")))
-        LabelStore.write(
-          LabelStore.labelsFor(docs.select(col("doc_id")), pairs), dirs(0))
-        Multimodal.frameStoreWrite(
-          tf.select(col("doc_id"), col("frame"), col("fhash")), dirs(1))
-        Multimodal.frameStoreWrite(
-          dh.select(col("doc_id"), lit(0).as("frame"),
-            col("dhash").as("fhash")), dirs(2))
-        Multimodal.frameStoreWrite(
-          af.select(col("doc_id"), lit(0).as("frame"),
-            col("afp").as("fhash")), dirs(3))
-        Multimodal.frameStoreWrite(
-          vf.select(col("doc_id"), col("frame"), col("fhash")), dirs(4))
-        graft.streaming.StreamingOps.multimodalRetractBatch(
-          s, dirs(1), dirs(2), dirs(3), dirs(4), dirs(0))(
-          Pipeline17.retractIds(docs))
-      }
+      val docs = documents(s, d)
+      val tf = Pipeline9.exactTextSigFrames(docs).localCheckpoint()
+      val dh = Multimodal.decodeRaster(Multimodal.attachRaster(docs))
+        .select(col("doc_id"), col("dhash")).localCheckpoint()
+      val af = Multimodal.decodeWave(Multimodal.attachWave(docs))
+        .select(col("doc_id"), col("afp")).localCheckpoint()
+      val vf = Multimodal.decodeVideoFrames(Multimodal.attachVideo(docs))
+        .select(col("doc_id"), col("frame"), col("n_frames"), col("fhash"))
+        .localCheckpoint()
+      val pairs = Pipeline9.exactTextPairsOf(docs)
+        .union(Multimodal.perceptualNearDupPairs(dh, maxHamming = 3)
+          .select(col("d1"), col("d2")))
+        .union(Multimodal.perceptualNearDupPairs(
+            af.select(col("doc_id"), col("afp").as("dhash")),
+            maxHamming = 3)
+          .select(col("d1"), col("d2")))
+        .union(Multimodal.videoNearDupPairs(vf, maxHamming = 3)
+          .select(col("d1"), col("d2")))
+      LabelStore.write(
+        LabelStore.labelsFor(docs.select(col("doc_id")), pairs), dirs(0))
+      Multimodal.frameStoreWrite(
+        tf.select(col("doc_id"), col("frame"), col("fhash")), dirs(1))
+      Multimodal.frameStoreWrite(
+        dh.select(col("doc_id"), lit(0).as("frame"),
+          col("dhash").as("fhash")), dirs(2))
+      Multimodal.frameStoreWrite(
+        af.select(col("doc_id"), lit(0).as("frame"),
+          col("afp").as("fhash")), dirs(3))
+      Multimodal.frameStoreWrite(
+        vf.select(col("doc_id"), col("frame"), col("fhash")), dirs(4))
+      graft.streaming.StreamingOps.multimodalRetractBatch(
+        s, dirs(1), dirs(2), dirs(3), dirs(4), dirs(0))(
+        Pipeline17.retractIds(docs))
     }
 
   /** p143: remove-equals-rebuild on the UNIFIED label space — the
@@ -346,25 +347,8 @@ object Pipeline18 {
     * p148, completing the four-modality release-draw symmetry.
     */
   private def retractedAudioRoot(s: SparkSession, d: String): String =
-    IndexStores.of("retract_audio_store", d) { p =>
-      val docs = documents(s, d)
-      Pipeline14.withScratch(s, s"$p/labels", s"$p/fp") {
-        val af = Multimodal.decodeWave(Multimodal.attachWave(docs))
-          .select(col("doc_id"), col("afp")).localCheckpoint()
-        Multimodal.frameStoreWrite(
-          af.select(col("doc_id"), lit(0).as("frame"),
-            col("afp").as("fhash")), s"$p/fp")
-        LabelStore.write(
-          LabelStore.labelsFor(af.select(col("doc_id")),
-            Multimodal.perceptualNearDupPairs(
-                af.select(col("doc_id"), col("afp").as("dhash")),
-                maxHamming = 3)
-              .select(col("d1"), col("d2"))),
-          s"$p/labels")
-        graft.streaming.StreamingOps.audioRetractBatch(
-          s, s"$p/fp", s"$p/labels")(Pipeline17.retractIds(docs))
-      }
-    }
+    audioTakedownRoot(s, d, "retract_audio_store",
+      graft.streaming.StreamingOps.audioRetractBatch(_, _, _)(_))
 
   /** p148: the POST-RETRACTION release draw over the AUDIO label space
     * — the fourth and last modality through the takedown-composed
@@ -486,35 +470,20 @@ object Pipeline18 {
        |FROM fin ORDER BY vec_id""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "p142_retraction_video_release" -> (retractionVideoRelease _),
-    "p145_drift_retrain_assignment" -> (driftRetrainAssignment _),
-    "p143_retraction_crossmodal_labels" -> (retractionXmodalLabels _),
-    "p144_retraction_crossmodal_release" -> (retractionXmodalRelease _),
-    "p148_retraction_audio_release" -> (retractionAudioRelease _),
-    "p149_deferred_video_pairs" -> (deferredVideoPairs _),
-    "p150_deferred_audio_pairs" -> (deferredAudioPairs _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    // withdrawn clips never drawn; surviving family members drawn at
-    // raised weights — the video release differential
-    "p142_retraction_video_release" -> retractionVideoReleaseOracle,
-    // remove-equals-rebuild on the unified cross-modal label space
-    "p143_retraction_crossmodal_labels" -> retractionXmodalLabelsOracle,
-    // the unified release draw over the post-takedown state
-    "p144_retraction_crossmodal_release" -> retractionXmodalReleaseOracle,
-    // gate fire → warm-start frozen Lloyd → checked swap: the swapped
-    // layout = the from-scratch assignment under the same warm start
-    "p145_drift_retrain_assignment" -> driftRetrainAssignmentOracle,
-    // the fourth modality's takedown-composed release: withdrawn
-    // tracks never drawn, surviving family members at raised weights
-    "p148_retraction_audio_release" -> retractionAudioReleaseOracle,
-    // the tombstone-aware video pair read over the deferred store
-    // state = the from-scratch temporal relation over survivors
-    "p149_deferred_video_pairs" -> deferredVideoPairsOracle,
-    // the one-frame twin: the tombstone-aware fingerprint pair read
-    // = the from-scratch banded Hamming relation over survivors
-    "p150_deferred_audio_pairs" -> deferredAudioPairsOracle,
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("p142_retraction_video_release", retractionVideoRelease,
+      Some(retractionVideoReleaseOracle)),
+    QuerySpec("p145_drift_retrain_assignment", driftRetrainAssignment,
+      Some(driftRetrainAssignmentOracle), Pricing.Training),
+    QuerySpec("p143_retraction_crossmodal_labels", retractionXmodalLabels,
+      Some(retractionXmodalLabelsOracle)),
+    QuerySpec("p144_retraction_crossmodal_release", retractionXmodalRelease,
+      Some(retractionXmodalReleaseOracle)),
+    QuerySpec("p148_retraction_audio_release", retractionAudioRelease,
+      Some(retractionAudioReleaseOracle)),
+    QuerySpec("p149_deferred_video_pairs", deferredVideoPairs,
+      Some(deferredVideoPairsOracle)),
+    QuerySpec("p150_deferred_audio_pairs", deferredAudioPairs,
+      Some(deferredAudioPairsOracle)),
   )
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.QuerySpec
 
 /** Pipeline operators, batch 2: corpus-relative term weighting
   * (TF-IDF) and exact per-stratum sampling — the curation steps that
@@ -148,15 +149,10 @@ object Pipeline2 {
       |WHERE n_xy >= 5
       |ORDER BY w1, w2""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "p22_tfidf"             -> (tfIdf _),
-    "p23_stratified_sample" -> (stratifiedSample _),
-    "p27_collocations"      -> (collocations _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "p22_tfidf"             -> tfIdfOracle,
-    "p23_stratified_sample" -> stratifiedSampleOracle,
-    "p27_collocations"      -> collocationsOracle,
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("p22_tfidf", tfIdf, Some(tfIdfOracle)),
+    QuerySpec("p23_stratified_sample", stratifiedSample,
+      Some(stratifiedSampleOracle)),
+    QuerySpec("p27_collocations", collocations, Some(collocationsOracle)),
   )
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.QuerySpec
 
 /** Pipeline operators, batch 3: dataset profiling and distribution
   * repair — the "look before you train" steps of a curation pipeline.
@@ -167,17 +168,10 @@ object Pipeline3 {
       |SELECT doc_id, fp, n_chars, n_copies FROM r WHERE rn = 1
       |ORDER BY doc_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "p24_profile"         -> (profile _),
-    "p25_winsorize"       -> (winsorize _),
-    "p26_embed_quantize"  -> (embedQuantize _),
-    "p28_dedup_keep_best" -> (dedupKeepBest _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "p24_profile"         -> profileOracle,
-    "p25_winsorize"       -> winsorizeOracle,
-    "p26_embed_quantize"  -> embedQuantizeOracle,
-    "p28_dedup_keep_best" -> dedupKeepBestOracle,
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("p24_profile", profile, Some(profileOracle)),
+    QuerySpec("p25_winsorize", winsorize, Some(winsorizeOracle)),
+    QuerySpec("p26_embed_quantize", embedQuantize, Some(embedQuantizeOracle)),
+    QuerySpec("p28_dedup_keep_best", dedupKeepBest, Some(dedupKeepBestOracle)),
   )
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.QuerySpec
 import graft.functions.TextAnalysis._
 
 /** Pipeline operators, batch 4: repetition-based quality signals,
@@ -256,19 +257,13 @@ object Pipeline4 {
       .orderBy(col("doc_id"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "p29_quality_repetition" -> (qualityRepetition _),
-    "p30_contamination"      -> (contamination _),
-    "p31_pack_sequences"     -> (packSequences _),
-    "p32_mix_rebalance"      -> (mixRebalance _),
-    "p33_dedup_clusters_logn" -> (dedupClustersLogN _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "p29_quality_repetition" -> qualityRepetitionOracle,
-    "p30_contamination"      -> contaminationOracle,
-    "p31_pack_sequences"     -> packSequencesOracle,
-    "p32_mix_rebalance"      -> mixRebalanceOracle,
-    "p33_dedup_clusters_logn" -> PipelineQueries.dedupClustersOracle,
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("p29_quality_repetition", qualityRepetition,
+      Some(qualityRepetitionOracle)),
+    QuerySpec("p30_contamination", contamination, Some(contaminationOracle)),
+    QuerySpec("p31_pack_sequences", packSequences, Some(packSequencesOracle)),
+    QuerySpec("p32_mix_rebalance", mixRebalance, Some(mixRebalanceOracle)),
+    QuerySpec("p33_dedup_clusters_logn", dedupClustersLogN,
+      Some(PipelineQueries.dedupClustersOracle)),
   )
 }

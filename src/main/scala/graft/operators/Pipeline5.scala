@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.{Pricing, QuerySpec}
 
 /** Pipeline operators, batch 5: shingle-novelty scoring, incremental
   * (snapshot-delta) dedup, and provenance-preserving corpus merge —
@@ -828,35 +829,29 @@ object Pipeline5 {
        |ORDER BY rank""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "p51_dup_spans"        -> (dupSpans _),
-    "p52_dup_span_coverage" -> (dupSpanCoverage _),
-    "p53_vocab_encode"     -> (vocabEncode _),
-    "p98_detokenize"       -> (detokenize _),
-    "p54_apply_span_cuts"  -> (applySpanCuts _),
-    "p34_shingle_novelty"  -> (shingleNovelty _),
-    "p35_incremental_dedup" -> (incrementalDedup _),
-    "p36_provenance_merge" -> (provenanceMerge _),
-    "p37_dup_rate_by_source" -> (dupRateBySource _),
-    "p38_chunk_overlap"    -> (chunkOverlap _),
-    "p39_weighted_sample"  -> (weightedSampleQuery _),
-    "p42_weighted_sample_by" -> (weightedSampleByQuery _),
-    "p43_mix_temperature"  -> (mixTemperatureQuery _),
-    "p69_bpe_merges"       -> (bpeMergesQuery _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "p51_dup_spans"        -> dupSpansOracle,
-    "p52_dup_span_coverage" -> dupSpanCoverageOracle,
-    "p53_vocab_encode"     -> vocabEncodeOracle,
-    "p98_detokenize"       -> detokenizeOracle,
-    "p54_apply_span_cuts"  -> applySpanCutsOracle,
-    "p34_shingle_novelty"  -> shingleNoveltyOracle,
-    "p35_incremental_dedup" -> incrementalDedupOracle,
-    "p36_provenance_merge" -> provenanceMergeOracle,
-    "p37_dup_rate_by_source" -> dupRateBySourceOracle,
-    "p38_chunk_overlap"    -> chunkOverlapOracle,
-    "p43_mix_temperature"  -> mixTemperatureOracle,
-    "p69_bpe_merges"       -> bpeMergesOracle,
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("p51_dup_spans", dupSpans, Some(dupSpansOracle)),
+    QuerySpec("p52_dup_span_coverage", dupSpanCoverage,
+      Some(dupSpanCoverageOracle)),
+    QuerySpec("p53_vocab_encode", vocabEncode, Some(vocabEncodeOracle)),
+    QuerySpec("p98_detokenize", detokenize, Some(detokenizeOracle)),
+    QuerySpec("p54_apply_span_cuts", applySpanCuts, Some(applySpanCutsOracle)),
+    QuerySpec("p34_shingle_novelty", shingleNovelty,
+      Some(shingleNoveltyOracle)),
+    QuerySpec("p35_incremental_dedup", incrementalDedup,
+      Some(incrementalDedupOracle)),
+    QuerySpec("p36_provenance_merge", provenanceMerge,
+      Some(provenanceMergeOracle)),
+    QuerySpec("p37_dup_rate_by_source", dupRateBySource,
+      Some(dupRateBySourceOracle)),
+    QuerySpec("p38_chunk_overlap", chunkOverlap, Some(chunkOverlapOracle)),
+    // rows-only: ln() is not correctly rounded across engines, so an
+    // oracle could flip a boundary row; PropertySpec pins both draws
+    QuerySpec("p39_weighted_sample", weightedSampleQuery, None),
+    QuerySpec("p42_weighted_sample_by", weightedSampleByQuery, None),
+    QuerySpec("p43_mix_temperature", mixTemperatureQuery,
+      Some(mixTemperatureOracle)),
+    QuerySpec("p69_bpe_merges", bpeMergesQuery, Some(bpeMergesOracle),
+      Pricing.Training),
   )
 }

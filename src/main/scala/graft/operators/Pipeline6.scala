@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.{Pricing, QuerySpec}
 import graft.functions.VectorOps.{cosine, dot}
 
 /** Pipeline operators, batch 6: the retrieval layer over a curated
@@ -1798,46 +1799,27 @@ object Pipeline6 {
        |FROM fin WHERE rn = 1 GROUP BY vec_id ORDER BY vec_id""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "p45_bm25_topk"    -> (bm25TopK _),
-    "p50_bm25_stored"  -> (bm25Stored _),
-    "p46_hybrid_rrf"   -> (hybridRrf _),
-    "p47_pq_codes"     -> (pqCodesQuery _),
-    "p48_pq_adc"       -> (pqAdcTopK _),
-    "p49_ivfpq_stored" -> (ivfPqStored _),
-    "p55_ivfpq_refine" -> (ivfPqRefined _),
-    "p56_pq_trained"   -> (pqCodesTrained _),
-    "p57_phrase_topk"  -> (phraseTopK _),
-    "p58_phrase_stored" -> (phraseStored _),
-    "p62_proximity_topk" -> (proximityTopK _),
-    "p63_proximity_stored" -> (proximityStored _),
-    "p64_ivfpq_residual" -> (ivfPqResidualStored _),
-    "p66_mmr_rerank" -> (mmrDiverse _),
-    "p68_lex_stats" -> (lexStats _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "p45_bm25_topk"    -> bm25TopKOracle,
-    // the stored posting-list layout is semantics-preserving: same
-    // oracle as p45
-    "p50_bm25_stored"  -> bm25TopKOracle,
-    "p46_hybrid_rrf"   -> hybridRrfOracle,
-    "p47_pq_codes"     -> pqCodesOracle,
-    "p48_pq_adc"       -> pqAdcTopKOracle,
-    // GRADUATED round 15: the frozen integer-micro training (the p124
-    // device on the subspace grid) made the trained codebook — and with
-    // it the full encode — first-principles re-derivable
-    "p56_pq_trained"   -> pqTrainedOracle,
-    "p49_ivfpq_stored" -> ivfPqStoredOracle,
-    "p55_ivfpq_refine" -> ivfPqRefinedOracle,
-    "p57_phrase_topk"  -> phraseTopKOracle,
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("p45_bm25_topk", bm25TopK, Some(bm25TopKOracle)),
+    // the stored layout is semantics-preserving: same oracle as p45
+    QuerySpec("p50_bm25_stored", bm25Stored, Some(bm25TopKOracle)),
+    QuerySpec("p46_hybrid_rrf", hybridRrf, Some(hybridRrfOracle)),
+    QuerySpec("p47_pq_codes", pqCodesQuery, Some(pqCodesOracle)),
+    QuerySpec("p48_pq_adc", pqAdcTopK, Some(pqAdcTopKOracle)),
+    QuerySpec("p49_ivfpq_stored", ivfPqStored, Some(ivfPqStoredOracle)),
+    QuerySpec("p55_ivfpq_refine", ivfPqRefined, Some(ivfPqRefinedOracle)),
+    QuerySpec("p56_pq_trained", pqCodesTrained, Some(pqTrainedOracle),
+      Pricing.Training),
+    QuerySpec("p57_phrase_topk", phraseTopK, Some(phraseTopKOracle)),
     // the positional layout is semantics-preserving: same oracle as p57
-    "p58_phrase_stored" -> phraseTopKOracle,
-    "p62_proximity_topk" -> proximityTopKOracle,
-    // same layout argument as p58: one oracle for both proximity paths
-    "p63_proximity_stored" -> proximityTopKOracle,
-    "p64_ivfpq_residual" -> ivfPqResidualOracle,
-    "p66_mmr_rerank" -> mmrOracle,
-    "p68_lex_stats" -> lexStatsOracle,
+    QuerySpec("p58_phrase_stored", phraseStored, Some(phraseTopKOracle)),
+    QuerySpec("p62_proximity_topk", proximityTopK, Some(proximityTopKOracle)),
+    // the positional layout is semantics-preserving: same oracle as p62
+    QuerySpec("p63_proximity_stored", proximityStored,
+      Some(proximityTopKOracle)),
+    QuerySpec("p64_ivfpq_residual", ivfPqResidualStored,
+      Some(ivfPqResidualOracle)),
+    QuerySpec("p66_mmr_rerank", mmrDiverse, Some(mmrOracle)),
+    QuerySpec("p68_lex_stats", lexStats, Some(lexStatsOracle)),
   )
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.QuerySpec
 
 /** Pipeline operators, batch 7: the tokenizer-application and
   * corpus-quality-model stages that sit between curation (batches 1–6)
@@ -410,17 +411,10 @@ object Pipeline7 {
        |FROM assign a ORDER BY a.vec_id""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "p70_bpe_encode" -> (bpeEncodeQuery _),
-    "p71_perplexity" -> (perplexity _),
-    "p72_dsir_weights" -> (dsirWeights _),
-    "p73_semdedup" -> (semDedup _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "p70_bpe_encode" -> bpeEncodeOracle,
-    "p71_perplexity" -> perplexityOracle,
-    "p72_dsir_weights" -> dsirWeightsOracle,
-    "p73_semdedup" -> semDedupOracle,
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("p70_bpe_encode", bpeEncodeQuery, Some(bpeEncodeOracle)),
+    QuerySpec("p71_perplexity", perplexity, Some(perplexityOracle)),
+    QuerySpec("p72_dsir_weights", dsirWeights, Some(dsirWeightsOracle)),
+    QuerySpec("p73_semdedup", semDedup, Some(semDedupOracle)),
   )
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.QuerySpec
 
 /** Pipeline operators, batch 8: the corpus-release stages — rule-based
   * quality filtering with per-rule verdicts (the Gopher/C4 filter
@@ -442,21 +443,14 @@ object Pipeline8 {
        |WHERE bit_count(xor(a.afp, b.afp)) <= 3
        |ORDER BY d1, d2""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "p74_quality_rules"   -> (qualityRules _),
-    "p75_shard_manifest"  -> (shardManifest _),
-    "p76_source_overlap"  -> (crossSourceOverlap _),
-    "p77_release_manifest" -> (releaseManifest _),
-    "p78_audio_decode"    -> (audioDecode _),
-    "p79_audio_neardup"   -> (audioNearDup _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "p74_quality_rules"   -> qualityRulesOracle,
-    "p75_shard_manifest"  -> shardManifestOracle,
-    "p76_source_overlap"  -> crossSourceOverlapOracle,
-    "p77_release_manifest" -> releaseManifestOracle,
-    "p78_audio_decode"    -> audioDecodeOracle,
-    "p79_audio_neardup"   -> audioNearDupOracle,
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("p74_quality_rules", qualityRules, Some(qualityRulesOracle)),
+    QuerySpec("p75_shard_manifest", shardManifest, Some(shardManifestOracle)),
+    QuerySpec("p76_source_overlap", crossSourceOverlap,
+      Some(crossSourceOverlapOracle)),
+    QuerySpec("p77_release_manifest", releaseManifest,
+      Some(releaseManifestOracle)),
+    QuerySpec("p78_audio_decode", audioDecode, Some(audioDecodeOracle)),
+    QuerySpec("p79_audio_neardup", audioNearDup, Some(audioNearDupOracle)),
   )
 }

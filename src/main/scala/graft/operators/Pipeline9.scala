@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.QuerySpec
 
 /** Pipeline operators, batch 9: pseudo-relevance feedback — the
   * query-expansion loop that closes the retrieval stack (seed query →
@@ -809,27 +810,17 @@ object Pipeline9 {
        |FROM rk WHERE rnk <= $EvalCapPerSource
        |ORDER BY source, doc_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "p80_rm3_expand"  -> (rm3Search _),
-    "p81_shard_append" -> (shardAppend _),
-    "p82_drift_report" -> (driftReport _),
-    "p83_eval_release" -> (evalRelease _),
-    "p84_maxp_search"  -> (maxpSearch _),
-    "p85_multimodal_dedup" -> (multimodalDedup _),
-    "p86_source_scorecard" -> (sourceScorecard _),
-    "p87_lm_decode"    -> (lmDecode _),
-    "p88_corpus_diff"  -> (corpusDiff _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "p80_rm3_expand"  -> rm3Oracle,
-    "p81_shard_append" -> shardAppendOracle,
-    "p82_drift_report" -> driftOracle,
-    "p83_eval_release" -> evalReleaseOracle,
-    "p84_maxp_search"  -> maxpOracle,
-    "p85_multimodal_dedup" -> multimodalDedupOracle,
-    "p86_source_scorecard" -> sourceScorecardOracle,
-    "p87_lm_decode"    -> lmDecodeOracle,
-    "p88_corpus_diff"  -> corpusDiffOracle,
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("p80_rm3_expand", rm3Search, Some(rm3Oracle)),
+    QuerySpec("p81_shard_append", shardAppend, Some(shardAppendOracle)),
+    QuerySpec("p82_drift_report", driftReport, Some(driftOracle)),
+    QuerySpec("p83_eval_release", evalRelease, Some(evalReleaseOracle)),
+    QuerySpec("p84_maxp_search", maxpSearch, Some(maxpOracle)),
+    QuerySpec("p85_multimodal_dedup", multimodalDedup,
+      Some(multimodalDedupOracle)),
+    QuerySpec("p86_source_scorecard", sourceScorecard,
+      Some(sourceScorecardOracle)),
+    QuerySpec("p87_lm_decode", lmDecode, Some(lmDecodeOracle)),
+    QuerySpec("p88_corpus_diff", corpusDiff, Some(corpusDiffOracle)),
   )
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.QuerySpec
 import graft.functions.TextAnalysis
 import graft.functions.TextAnalysis._
 
@@ -785,70 +786,49 @@ object PipelineQueries {
       |WHERE cum_tokens <= 3000
       |ORDER BY doc_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "p01_dedup_exact"         -> (dedupExact _),
-    "p02_dedup_fingerprint"   -> (dedupFingerprint _),
-    "p03_dedup_ngram_jaccard" -> (dedupNgramJaccard _),
-    "p04_dedup_minhash_lsh"   -> (dedupMinhashLsh _),
-    "p05_dedup_simhash"       -> (dedupSimhash _),
-    "p06_text_stats"          -> (textStats _),
-    "p07_text_langid"         -> (textLangId _),
-    "p08_text_tokens"         -> (textTokens _),
-    "p09_sim_topk"            -> (simTopK _),
-    "p10_sim_ann_lsh"         -> (simAnnLsh _),
-    "p40_sim_ann_capped"      -> (simAnnLshCapped _),
-    "p11_embed_neardup"       -> (embedNearDup _),
-    "p12_multimodal_inspect"  -> (multimodalInspect _),
-    "p13_sim_ivf"             -> (simIvf _),
-    "p41_sim_ivf_stored"      -> (simIvfStored _),
-    "p65_sim_filtered"        -> (simIvfStoredFiltered _),
-    "p44_ivf_cell_stats"      -> (simIvfCellStats _),
-    "p14_frame_sample"        -> (frameSampleQ _),
-    "p15_multimodal_decode"   -> (multimodalDecode _),
-    "p59_perceptual_neardup"  -> (perceptualNearDup _),
-    "p60_perceptual_clusters" -> (perceptualClusters _),
-    "p61_fuzzy_neardup"       -> (fuzzyNearDup _),
-    "p16_approx_stats"        -> (Sketches.approxStats _),
-    "p17_redact"              -> (redact _),
-    "p18_hash_sample"         -> (hashSample _),
-    "p19_token_budget"        -> (tokenBudget _),
-    "p20_dedup_clusters"      -> (dedupClusters _),
-    "p67_leakfree_split"      -> (leakFreeSplit _),
-    "p21_typed_stats"         -> (TypedStats.corpusStatsByLen _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "p01_dedup_exact"         -> dedupExactOracle,
-    "p02_dedup_fingerprint"   -> dedupFingerprintOracle,
-    "p03_dedup_ngram_jaccard" -> dedupNgramJaccardOracle,
-    "p04_dedup_minhash_lsh"   -> dedupMinhashLshOracle,
-    "p05_dedup_simhash"       -> dedupSimhashOracle,
-    "p06_text_stats"          -> textStatsOracle,
-    "p07_text_langid"         -> textLangIdOracle,
-    "p08_text_tokens"         -> textTokensOracle,
-    "p09_sim_topk"            -> simTopKOracle,
-    "p10_sim_ann_lsh"         -> simAnnLshOracle,
-    "p40_sim_ann_capped"      -> simAnnLshCappedOracle,
-    "p11_embed_neardup"       -> embedNearDupOracle,
-    "p12_multimodal_inspect"  -> multimodalInspectOracle,
-    "p13_sim_ivf"             -> simIvfOracle,
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("p01_dedup_exact", dedupExact, Some(dedupExactOracle)),
+    QuerySpec("p02_dedup_fingerprint", dedupFingerprint,
+      Some(dedupFingerprintOracle)),
+    QuerySpec("p03_dedup_ngram_jaccard", dedupNgramJaccard,
+      Some(dedupNgramJaccardOracle)),
+    QuerySpec("p04_dedup_minhash_lsh", dedupMinhashLsh,
+      Some(dedupMinhashLshOracle)),
+    QuerySpec("p05_dedup_simhash", dedupSimhash, Some(dedupSimhashOracle)),
+    QuerySpec("p06_text_stats", textStats, Some(textStatsOracle)),
+    QuerySpec("p07_text_langid", textLangId, Some(textLangIdOracle)),
+    QuerySpec("p08_text_tokens", textTokens, Some(textTokensOracle)),
+    QuerySpec("p09_sim_topk", simTopK, Some(simTopKOracle)),
+    QuerySpec("p10_sim_ann_lsh", simAnnLsh, Some(simAnnLshOracle)),
+    QuerySpec("p40_sim_ann_capped", simAnnLshCapped,
+      Some(simAnnLshCappedOracle)),
+    QuerySpec("p11_embed_neardup", embedNearDup, Some(embedNearDupOracle)),
+    QuerySpec("p12_multimodal_inspect", multimodalInspect,
+      Some(multimodalInspectOracle)),
+    QuerySpec("p13_sim_ivf", simIvf, Some(simIvfOracle)),
     // the stored layout is semantics-preserving: same oracle as p13
-    "p41_sim_ivf_stored"      -> simIvfOracle,
-    "p65_sim_filtered"        -> simIvfFilteredOracle,
-    "p44_ivf_cell_stats"      -> simIvfCellStatsOracle,
-    "p14_frame_sample"        -> frameSampleOracle,
-    "p15_multimodal_decode"   -> multimodalDecodeOracle,
-    "p59_perceptual_neardup"  -> perceptualNearDupOracle,
-    "p60_perceptual_clusters" -> perceptualClustersOracle,
-    "p61_fuzzy_neardup"       -> fuzzyNearDupOracle,
-    // p16_approx_stats: no oracle (HLL++/percentile_approx estimates are
-    // algorithm-specific; DuckDB's sketches differ) — rows-only check;
-    // SketchesSpec pins the error envelope against exact twins.
-    "p17_redact"              -> redactOracle,
-    "p18_hash_sample"         -> hashSampleOracle,
-    "p19_token_budget"        -> tokenBudgetOracle,
-    "p20_dedup_clusters"      -> dedupClustersOracle,
-    "p67_leakfree_split"      -> leakFreeSplitOracle,
-    "p21_typed_stats"         -> TypedStats.corpusStatsOracle,
+    QuerySpec("p41_sim_ivf_stored", simIvfStored, Some(simIvfOracle)),
+    QuerySpec("p65_sim_filtered", simIvfStoredFiltered,
+      Some(simIvfFilteredOracle)),
+    QuerySpec("p44_ivf_cell_stats", simIvfCellStats,
+      Some(simIvfCellStatsOracle)),
+    QuerySpec("p14_frame_sample", frameSampleQ, Some(frameSampleOracle)),
+    QuerySpec("p15_multimodal_decode", multimodalDecode,
+      Some(multimodalDecodeOracle)),
+    QuerySpec("p59_perceptual_neardup", perceptualNearDup,
+      Some(perceptualNearDupOracle)),
+    QuerySpec("p60_perceptual_clusters", perceptualClusters,
+      Some(perceptualClustersOracle)),
+    QuerySpec("p61_fuzzy_neardup", fuzzyNearDup, Some(fuzzyNearDupOracle)),
+    // rows-only: HLL++/percentile_approx estimates are engine-specific;
+    // SketchesSpec pins the error envelope against exact twins
+    QuerySpec("p16_approx_stats", Sketches.approxStats, None),
+    QuerySpec("p17_redact", redact, Some(redactOracle)),
+    QuerySpec("p18_hash_sample", hashSample, Some(hashSampleOracle)),
+    QuerySpec("p19_token_budget", tokenBudget, Some(tokenBudgetOracle)),
+    QuerySpec("p20_dedup_clusters", dedupClusters, Some(dedupClustersOracle)),
+    QuerySpec("p67_leakfree_split", leakFreeSplit, Some(leakFreeSplitOracle)),
+    QuerySpec("p21_typed_stats", TypedStats.corpusStatsByLen,
+      Some(TypedStats.corpusStatsOracle)),
   )
 }

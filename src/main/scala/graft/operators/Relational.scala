@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables._
+import graft.QuerySpec
 
 /** Relational operator surface (SURVEY.md §7.2 M3).
   *
@@ -383,46 +384,24 @@ object Relational {
       |SELECT user_id, CAST(max(session_id) AS BIGINT) AS n_sessions, count(*) AS n_events
       |FROM sess GROUP BY user_id ORDER BY user_id""".stripMargin
 
-  /** All (name -> query) pairs contributed by this object. */
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_pricing_summary" -> (q01PricingSummary _),
-    "q02_filter_project"  -> (q02FilterProject _),
-    "q03_join_broadcast"  -> (q03JoinBroadcast _),
-    "q04_join_snowflake"  -> (q04JoinSnowflake _),
-    "q05_semi_join"       -> (q05SemiJoin _),
-    "q06_anti_join"       -> (q06AntiJoin _),
-    "q07_window_topn"     -> (q07WindowTopN _),
-    "q08_topk"            -> (q08TopK _),
-    "q09_intersect"       -> (q09Intersect _),
-    "q10_except"          -> (q10Except _),
-    "q11_rollup"          -> (q11Rollup _),
-    "q12_cube"            -> (q12Cube _),
-    "q13_scalars"         -> (q13Scalars _),
-    "q14_json"            -> (q14Json _),
-    "q15_hourly_events"   -> (q15HourlyEvents _),
-    "q16_exists_text"     -> (q16ExistsText _),
-    "q17_union_all"       -> (q17UnionAll _),
-    "q18_sessionize"      -> (q18Sessionize _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q01_pricing_summary" -> q01Oracle,
-    "q02_filter_project"  -> q02Oracle,
-    "q03_join_broadcast"  -> q03Oracle,
-    "q04_join_snowflake"  -> q04Oracle,
-    "q05_semi_join"       -> q05Oracle,
-    "q06_anti_join"       -> q06Oracle,
-    "q07_window_topn"     -> q07Oracle,
-    "q08_topk"            -> q08Oracle,
-    "q09_intersect"       -> q09Oracle,
-    "q10_except"          -> q10Oracle,
-    "q11_rollup"          -> q11Oracle,
-    "q12_cube"            -> q12Oracle,
-    "q13_scalars"         -> q13Oracle,
-    "q14_json"            -> q14Oracle,
-    "q15_hourly_events"   -> q15Oracle,
-    "q16_exists_text"     -> q16Oracle,
-    "q17_union_all"       -> q17Oracle,
-    "q18_sessionize"      -> q18Oracle,
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q01_pricing_summary", q01PricingSummary, Some(q01Oracle)),
+    QuerySpec("q02_filter_project", q02FilterProject, Some(q02Oracle)),
+    QuerySpec("q03_join_broadcast", q03JoinBroadcast, Some(q03Oracle)),
+    QuerySpec("q04_join_snowflake", q04JoinSnowflake, Some(q04Oracle)),
+    QuerySpec("q05_semi_join", q05SemiJoin, Some(q05Oracle)),
+    QuerySpec("q06_anti_join", q06AntiJoin, Some(q06Oracle)),
+    QuerySpec("q07_window_topn", q07WindowTopN, Some(q07Oracle)),
+    QuerySpec("q08_topk", q08TopK, Some(q08Oracle)),
+    QuerySpec("q09_intersect", q09Intersect, Some(q09Oracle)),
+    QuerySpec("q10_except", q10Except, Some(q10Oracle)),
+    QuerySpec("q11_rollup", q11Rollup, Some(q11Oracle)),
+    QuerySpec("q12_cube", q12Cube, Some(q12Oracle)),
+    QuerySpec("q13_scalars", q13Scalars, Some(q13Oracle)),
+    QuerySpec("q14_json", q14Json, Some(q14Oracle)),
+    QuerySpec("q15_hourly_events", q15HourlyEvents, Some(q15Oracle)),
+    QuerySpec("q16_exists_text", q16ExistsText, Some(q16Oracle)),
+    QuerySpec("q17_union_all", q17UnionAll, Some(q17Oracle)),
+    QuerySpec("q18_sessionize", q18Sessionize, Some(q18Oracle)),
   )
 }

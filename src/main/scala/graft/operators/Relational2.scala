@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables._
+import graft.QuerySpec
 
 /** Relational surface, batch 2: subqueries, pivot-style conditional
   * aggregation, array/unnest, date arithmetic, arg-max, percentiles,
@@ -267,35 +268,19 @@ object Relational2 {
       |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
       |ORDER BY o_custkey, o_orderkey""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q19_in_subquery"    -> (q19InSubquery _),
-    "q20_scalar_subquery" -> (q20ScalarSubquery _),
-    "q21_pivot"          -> (q21Pivot _),
-    "q22_unnest"         -> (q22Unnest _),
-    "q23_date_arith"     -> (q23DateArith _),
-    "q24_arg_max"        -> (q24ArgMax _),
-    "q25_percentile"     -> (q25Percentile _),
-    "q26_distinct_agg"   -> (q26DistinctAgg _),
-    "q27_grouping_sets"  -> (q27GroupingSets _),
-    "q28_regex"          -> (q28Regex _),
-    "q29_array_funcs"    -> (q29ArrayFuncs _),
-    "q30_conditional"    -> (q30Conditional _),
-    "q31_window_funcs"   -> (q31WindowFuncs _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q19_in_subquery"    -> q19Oracle,
-    "q20_scalar_subquery" -> q20Oracle,
-    "q21_pivot"          -> q21Oracle,
-    "q22_unnest"         -> q22Oracle,
-    "q23_date_arith"     -> q23Oracle,
-    "q24_arg_max"        -> q24Oracle,
-    "q25_percentile"     -> q25Oracle,
-    "q26_distinct_agg"   -> q26Oracle,
-    "q27_grouping_sets"  -> q27Oracle,
-    "q28_regex"          -> q28Oracle,
-    "q29_array_funcs"    -> q29Oracle,
-    "q30_conditional"    -> q30Oracle,
-    "q31_window_funcs"   -> q31Oracle,
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q19_in_subquery", q19InSubquery, Some(q19Oracle)),
+    QuerySpec("q20_scalar_subquery", q20ScalarSubquery, Some(q20Oracle)),
+    QuerySpec("q21_pivot", q21Pivot, Some(q21Oracle)),
+    QuerySpec("q22_unnest", q22Unnest, Some(q22Oracle)),
+    QuerySpec("q23_date_arith", q23DateArith, Some(q23Oracle)),
+    QuerySpec("q24_arg_max", q24ArgMax, Some(q24Oracle)),
+    QuerySpec("q25_percentile", q25Percentile, Some(q25Oracle)),
+    QuerySpec("q26_distinct_agg", q26DistinctAgg, Some(q26Oracle)),
+    QuerySpec("q27_grouping_sets", q27GroupingSets, Some(q27Oracle)),
+    QuerySpec("q28_regex", q28Regex, Some(q28Oracle)),
+    QuerySpec("q29_array_funcs", q29ArrayFuncs, Some(q29Oracle)),
+    QuerySpec("q30_conditional", q30Conditional, Some(q30Oracle)),
+    QuerySpec("q31_window_funcs", q31WindowFuncs, Some(q31Oracle)),
   )
 }

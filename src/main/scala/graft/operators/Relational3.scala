@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables._
+import graft.QuerySpec
 
 /** Relational surface, batch 3 — the operators Spark has no single
   * builtin for, each expressed in its scale-correct distributed shape:
@@ -179,21 +180,12 @@ object Relational3 {
       |FROM lineitem JOIN part ON l_partkey = p_partkey
       |GROUP BY p_brand ORDER BY p_brand""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q32_asof_join"    -> (q32AsofJoin _),
-    "q33_range_join"   -> (q33RangeJoin _),
-    "q34_salted_agg"   -> (q34SaltedAgg _),
-    "q35_rolling_hash" -> (q35RollingHash _),
-    "q36_topk_agg"     -> (q36TopkAgg _),
-    "q37_part_revenue" -> (q37PartRevenue _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q32_asof_join"    -> q32Oracle,
-    "q33_range_join"   -> q33Oracle,
-    "q34_salted_agg"   -> q34Oracle,
-    "q35_rolling_hash" -> q35Oracle,
-    "q36_topk_agg"     -> q36Oracle,
-    "q37_part_revenue" -> q37Oracle,
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q32_asof_join", q32AsofJoin, Some(q32Oracle)),
+    QuerySpec("q33_range_join", q33RangeJoin, Some(q33Oracle)),
+    QuerySpec("q34_salted_agg", q34SaltedAgg, Some(q34Oracle)),
+    QuerySpec("q35_rolling_hash", q35RollingHash, Some(q35Oracle)),
+    QuerySpec("q36_topk_agg", q36TopkAgg, Some(q36Oracle)),
+    QuerySpec("q37_part_revenue", q37PartRevenue, Some(q37Oracle)),
   )
 }

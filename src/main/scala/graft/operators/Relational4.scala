@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.QuerySpec
 
 /** Relational surface, batch 4: histograms, statistical aggregates,
   * multiset set-operations, and the wider string-function family.
@@ -194,23 +195,13 @@ object Relational4 {
        |ORDER BY o_orderkey""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q38_histogram"    -> (q38Histogram _),
-    "q39_stats_family" -> (q39StatsFamily _),
-    "q40_set_all"      -> (q40SetAll _),
-    "q41_string_funcs" -> (q41StringFuncs _),
-    "q42_hash_funcs"   -> (q42HashFuncs _),
-    "q43_range_window" -> (q43RangeWindow _),
-    "q44_zorder"       -> (q44Zorder _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q38_histogram"    -> q38Oracle,
-    "q39_stats_family" -> q39Oracle,
-    "q40_set_all"      -> q40Oracle,
-    "q41_string_funcs" -> q41Oracle,
-    "q42_hash_funcs"   -> q42Oracle,
-    "q43_range_window" -> q43Oracle,
-    "q44_zorder"       -> q44Oracle,
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q38_histogram", q38Histogram, Some(q38Oracle)),
+    QuerySpec("q39_stats_family", q39StatsFamily, Some(q39Oracle)),
+    QuerySpec("q40_set_all", q40SetAll, Some(q40Oracle)),
+    QuerySpec("q41_string_funcs", q41StringFuncs, Some(q41Oracle)),
+    QuerySpec("q42_hash_funcs", q42HashFuncs, Some(q42Oracle)),
+    QuerySpec("q43_range_window", q43RangeWindow, Some(q43Oracle)),
+    QuerySpec("q44_zorder", q44Zorder, Some(q44Oracle)),
   )
 }

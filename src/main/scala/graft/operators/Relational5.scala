@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.QuerySpec
 
 /** Relational surface, batch 5: time-series resample/gap-fill with
   * forward fill, and ordered funnel analysis over the event stream.
@@ -315,23 +316,13 @@ object Relational5 {
       |WHERE o.vq * per.n > per.sv
       |ORDER BY o.o_orderkey""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q51_above_avg"      -> (q51AboveAvg _),
-    "q50_merge_upsert"   -> (q50MergeUpsert _),
-    "q45_gapfill"        -> (q45GapFill _),
-    "q46_funnel"         -> (q46Funnel _),
-    "q47_window_family2" -> (q47WindowFamily2 _),
-    "q48_anomaly"        -> (q48Anomaly _),
-    "q49_transitions"    -> (q49Transitions _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q51_above_avg"      -> q51Oracle,
-    "q50_merge_upsert"   -> q50Oracle,
-    "q45_gapfill"        -> q45Oracle,
-    "q46_funnel"         -> q46Oracle,
-    "q47_window_family2" -> q47Oracle,
-    "q48_anomaly"        -> q48Oracle,
-    "q49_transitions"    -> q49Oracle,
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q51_above_avg", q51AboveAvg, Some(q51Oracle)),
+    QuerySpec("q50_merge_upsert", q50MergeUpsert, Some(q50Oracle)),
+    QuerySpec("q45_gapfill", q45GapFill, Some(q45Oracle)),
+    QuerySpec("q46_funnel", q46Funnel, Some(q46Oracle)),
+    QuerySpec("q47_window_family2", q47WindowFamily2, Some(q47Oracle)),
+    QuerySpec("q48_anomaly", q48Anomaly, Some(q48Oracle)),
+    QuerySpec("q49_transitions", q49Transitions, Some(q49Oracle)),
   )
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.QuerySpec
 
 /** Relational operators, batch 6: distributed join hardening — the
   * two standard shuffle-volume weapons (key salting for skew,
@@ -94,13 +95,8 @@ object Relational6 {
       |WHERE o_orderpriority = '1-URGENT'
       |GROUP BY 1 ORDER BY 1""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q52_salted_join"        -> (q52SaltedJoin _),
-    "q53_semijoin_reduction" -> (q53SemiJoinReduction _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q52_salted_join"        -> q52Oracle,
-    "q53_semijoin_reduction" -> q53Oracle,
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q52_salted_join", q52SaltedJoin, Some(q52Oracle)),
+    QuerySpec("q53_semijoin_reduction", q53SemiJoinReduction, Some(q53Oracle)),
   )
 }

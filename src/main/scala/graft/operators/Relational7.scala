@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.QuerySpec
 
 /** Relational operators, batch 7: event debouncing, distributed
   * higher moments, relational division, global rank without a global
@@ -237,33 +238,19 @@ object Relational7 {
       |WHERE o_orderpriority = '2-HIGH'
       |GROUP BY 1 ORDER BY 1""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q54_debounce"         -> (q54Debounce _),
-    "q55_moments"          -> (q55Moments _),
-    "q56_division"         -> (q56Division _),
-    "q57_global_rank"      -> (q57GlobalRank _),
-    "q58_sliding_distinct" -> (q58SlidingDistinct _),
-    "q59_multi_needle"     -> (q59MultiNeedle _),
-    "q60_bloom_join"       -> (q60BloomJoin _),
-    // q58's declared corpus-scale variant: sketches merge, so the x3
-    // event expansion collapses to an expansion of the hourly table.
-    // Rows-only (engine-specific HLL estimates — see Sketches scaladoc);
-    // SketchesSpec pins the error envelope against exact q58.
-    "q61_sliding_distinct_hll" -> (Sketches.slidingDistinctHll _),
-    // SpaceSaving approximate top terms: capacity-bounded BEFORE the
-    // shuffle, unlike the exact one-row-per-distinct-term twin.
-    // Rows-only (order-sensitive sketch); SketchesSpec pins the
-    // (cnt, err) bounds against exact counts.
-    "q62_heavy_hitters"    -> (Sketches.heavyHitters _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q54_debounce"         -> q54Oracle,
-    "q55_moments"          -> q55Oracle,
-    "q56_division"         -> q56Oracle,
-    "q57_global_rank"      -> q57Oracle,
-    "q58_sliding_distinct" -> q58Oracle,
-    "q59_multi_needle"     -> q59Oracle,
-    "q60_bloom_join"       -> q60Oracle,
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q54_debounce", q54Debounce, Some(q54Oracle)),
+    QuerySpec("q55_moments", q55Moments, Some(q55Oracle)),
+    QuerySpec("q56_division", q56Division, Some(q56Oracle)),
+    QuerySpec("q57_global_rank", q57GlobalRank, Some(q57Oracle)),
+    QuerySpec("q58_sliding_distinct", q58SlidingDistinct, Some(q58Oracle)),
+    QuerySpec("q59_multi_needle", q59MultiNeedle, Some(q59Oracle)),
+    QuerySpec("q60_bloom_join", q60BloomJoin, Some(q60Oracle)),
+    // rows-only: HLL estimates are engine-specific; SketchesSpec pins
+    // the error envelope against the exact q58
+    QuerySpec("q61_sliding_distinct_hll", Sketches.slidingDistinctHll, None),
+    // rows-only: the SpaceSaving sketch is order-sensitive; SketchesSpec
+    // pins the (cnt, err) bounds against exact counts
+    QuerySpec("q62_heavy_hitters", Sketches.heavyHitters, None),
   )
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.QuerySpec
 
 /** Relational operators, batch 8: iterative graph traversal — the
   * recursive-query class (`WITH RECURSIVE` in SQL engines) expressed
@@ -873,43 +874,25 @@ object Relational8 {
        |GROUP BY dir.u ORDER BY node""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q63_reachability" -> (q63Reachability _),
-    "q64_pagerank"     -> (q64PageRank _),
-    "q65_triangles"    -> (q65Triangles _),
-    "q66_kcore"        -> (q66KCore _),
-    // DDSketch-style log-histogram quantiles — the rare sketch whose
-    // state is order-free, so unlike q61/q62 it carries a FULL oracle
-    "q67_quantile_sketch" -> (Sketches.quantileSketch _),
-    "q68_retention"    -> (q68Retention _),
-    "q69_ewma"         -> (q69Ewma _),
-    "q70_streaks"      -> (q70Streaks _),
-    "q71_unpivot"      -> (q71Unpivot _),
-    "q72_pagerank_weighted" -> (q72PageRankWeighted _),
-    "q73_mad"          -> (q73Mad _),
-    "q75_subtree_rollup" -> (q75SubtreeRollup _),
-    // same oracle as q65: triangle counts are orientation-invariant,
-    // so the degree-ordered web-scale path is hash-checked against the
-    // identical DuckDB mirror — the scale form itself sits under the
-    // correctness gate, not just under a property test
-    "q74_triangles_degree" -> ((s: SparkSession, d: String) =>
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q63_reachability", q63Reachability, Some(q63Oracle)),
+    QuerySpec("q64_pagerank", q64PageRank, Some(q64Oracle)),
+    QuerySpec("q65_triangles", q65Triangles, Some(q65Oracle)),
+    QuerySpec("q66_kcore", q66KCore, Some(q66Oracle)),
+    // the sketch state is order-free, so unlike q61/q62 it has an oracle
+    QuerySpec("q67_quantile_sketch", Sketches.quantileSketch,
+      Some(Sketches.quantileSketchOracle)),
+    QuerySpec("q68_retention", q68Retention, Some(q68Oracle)),
+    QuerySpec("q69_ewma", q69Ewma, Some(q69Oracle)),
+    QuerySpec("q70_streaks", q70Streaks, Some(q70Oracle)),
+    QuerySpec("q71_unpivot", q71Unpivot, Some(q71Oracle)),
+    QuerySpec("q72_pagerank_weighted", q72PageRankWeighted, Some(q72Oracle)),
+    QuerySpec("q73_mad", q73Mad, Some(q73Oracle)),
+    QuerySpec("q75_subtree_rollup", q75SubtreeRollup, Some(q75Oracle)),
+    // same oracle as q65: triangle counts are orientation-invariant, so
+    // the degree-ordered scale path sits under the correctness gate too
+    QuerySpec("q74_triangles_degree", (s, d) =>
       trianglesDegreeOrdered(canonicalUndirected(incidentEdges(s, d)))
-        .orderBy(col("node"))),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q63_reachability" -> q63Oracle,
-    "q64_pagerank"     -> q64Oracle,
-    "q65_triangles"    -> q65Oracle,
-    "q66_kcore"        -> q66Oracle,
-    "q67_quantile_sketch" -> Sketches.quantileSketchOracle,
-    "q68_retention"    -> q68Oracle,
-    "q69_ewma"         -> q69Oracle,
-    "q70_streaks"      -> q70Oracle,
-    "q71_unpivot"      -> q71Oracle,
-    "q72_pagerank_weighted" -> q72Oracle,
-    "q73_mad"          -> q73Oracle,
-    "q74_triangles_degree" -> q65Oracle,
-    "q75_subtree_rollup" -> q75Oracle,
+        .orderBy(col("node")), Some(q65Oracle)),
   )
 }

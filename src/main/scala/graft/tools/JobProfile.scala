@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Dev profiler (guide §1): decompose one query's wall-clock into its
   * Spark JOBS — count, per-job wall time, task-time sum, shuffle bytes —
@@ -112,22 +111,7 @@ object JobProfile {
     val sfDir = args(0)
     val reps = args(1).toInt
     val names = args.drop(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      // AQE right-sizing (guide §2.2): honor the advisory partition
-      // size when coalescing instead of pinning every reduce stage at
-      // the core count — tiny intermediate shuffles collapse to one
-      // task; corpus-sized ones stay advisory-sized (64 MB default), so
-      // at 100 TB nothing coalesces below the cluster's parallelism.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.DriverSession()
     spark.range(1000).selectExpr("sum(id)").collect()
     val agg = new Agg
     spark.sparkContext.addSparkListener(agg)

@@ -36,3 +36,16 @@ object ColumnBridge {
       spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
     }
 }
+
+/** Spark's temp-directory lifecycle, which is `private[spark]`: a
+  * directory made here is deleted with its contents by Spark's own
+  * shutdown hook when the JVM exits.
+  */
+object TempDirs {
+  /** A fresh `<prefix>-<uuid>` directory under `java.io.tmpdir`. */
+  def deletedAtExit(prefix: String): java.io.File =
+    org.apache.spark.util.Utils.createTempDir(namePrefix = prefix)
+
+  def deleteRecursively(dir: java.io.File): Unit =
+    org.apache.spark.util.Utils.deleteRecursively(dir)
+}

@@ -14,23 +14,64 @@ class ContractSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("query map is non-empty and names are unique across batches") {
-    val all = Seq(operators.Relational.queries, operators.Relational2.queries,
-      operators.Relational3.queries, operators.Relational4.queries,
-      operators.Relational5.queries, operators.Relational6.queries,
-      operators.Relational7.queries, operators.Relational8.queries,
-      operators.PipelineQueries.queries, operators.Pipeline2.queries,
-      operators.Pipeline3.queries, operators.Pipeline4.queries,
-      operators.Pipeline5.queries, operators.Pipeline6.queries,
-      operators.Pipeline7.queries, operators.Pipeline8.queries,
-      operators.Pipeline9.queries, operators.Pipeline10.queries,
-      operators.Pipeline11.queries, operators.Pipeline12.queries,
-      operators.Pipeline13.queries, operators.Pipeline14.queries,
-      operators.Pipeline15.queries, operators.Pipeline16.queries,
-      operators.Pipeline17.queries, operators.Pipeline18.queries)
-    assert(all.map(_.size).sum === SparkEntry.queries.size,
+    val names = SparkEntry.registry.map(_.name)
+    val dups = names.diff(names.distinct)
+    assert(dups.isEmpty, s"names declared more than once: $dups")
+    assert(SparkEntry.queries.size === SparkEntry.registry.size,
       "duplicate query name across batches (map merge dropped one)")
     assert(SparkEntry.queries.size >= 226,
       "registered-query surface shrank below the round-15 ledger")
+  }
+
+  test("non-probe pricing classes are exactly the declared ones") {
+    // a renamed or re-declared entry must not silently fall to probe
+    val nonProbe = SparkEntry.registry.filter(_.pricing != Pricing.Probe)
+      .map(s => s.name -> s.pricing.name).toMap
+    assert(nonProbe === Map(
+      "p123_incremental_soft_dedup" -> "ingestion",
+      "p126_incremental_vector_labels" -> "ingestion",
+      "p127_incremental_video_labels" -> "ingestion",
+      "p128_incremental_audio_labels" -> "ingestion",
+      "p132_incremental_crossmodal" -> "ingestion",
+      "p136_retraction_labels" -> "retraction",
+      "p137_retraction_bm25" -> "retraction",
+      "p140_retraction_vector_labels" -> "retraction",
+      "p56_pq_trained" -> "training",
+      "p69_bpe_merges" -> "training",
+      "p107_perceptron_pocket" -> "training",
+      "p124_ann_tuning_trained" -> "training",
+      "p145_drift_retrain_assignment" -> "training"))
+  }
+
+  test("the driver session carries every setting Bench prices with") {
+    // BenchOne, ExplainAll and the tools build their session from the
+    // same settings, so none of them can drift from Bench's plans
+    assert(DriverSession.settings("7").toMap === Map(
+      "spark.master" -> "local[7]",
+      "spark.sql.shuffle.partitions" -> "7",
+      "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false",
+      "spark.ui.enabled" -> "false",
+      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "1000000",
+      "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
+      "spark.sql.extensions" -> "graft.GraftExtensions",
+      "spark.sql.session.timeZone" -> "UTC"))
+  }
+
+  test("IndexStores: stores share one per-JVM root; a failed build leaves no dir") {
+    var failed: java.io.File = null
+    intercept[IllegalStateException] {
+      operators.IndexStores.of("contract_fail", "unused") { p =>
+        failed = new java.io.File(p)
+        java.nio.file.Files.writeString(new java.io.File(p, "part").toPath, "x")
+        throw new IllegalStateException("build failed")
+      }
+    }
+    assert(failed != null && !failed.exists(),
+      "a build that throws must delete its store directory")
+    val ok = new java.io.File(
+      operators.IndexStores.of("contract_ok", "unused")(_ => ()))
+    assert(ok.isDirectory && ok.getParentFile == failed.getParentFile)
+    assert(ok.getParentFile.getName.startsWith("graft_stores"))
   }
 
   test("rows-only queries (no oracle) are the documented exceptions only") {
