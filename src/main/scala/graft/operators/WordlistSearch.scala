@@ -12,7 +12,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.hadoop.io.compress.CompressionCodecFactory
+import org.apache.hadoop.io.compress.{CompressionCodecFactory, SplittableCompressionCodec}
+import org.apache.hadoop.mapred.JobConf
 import org.apache.spark.{SparkContext, TaskContext}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
@@ -21,8 +22,8 @@ import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, XXH64}
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution.PartitionedFileUtil
 import org.apache.spark.sql.execution.datasources.{FilePartition, FileScanRDD,
-  HadoopFileLinesReader, InMemoryFileIndex, PartitionedFile}
-import org.apache.spark.sql.execution.datasources.text.TextFileFormat
+  FileStatusWithMetadata, HadoopFileLinesReader, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.graftext.FileListing
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.Platform
@@ -41,9 +42,9 @@ import org.apache.spark.util.sketch.BloomFilter
   *    "optimal" — lowercased probe, inclusive containment, overlapping
   *    ranges produce multi-chunk fan-out)  → [[requiredChunks]]
   *  - chunk files handed to slaves    → [[probeSplits]]: the pruned
-  *    buckets listed by Spark's `InMemoryFileIndex` (the listing
-  *    `textFile` uses, so hidden and `_` files drop out alike) and cut
-  *    into about one split per core
+  *    buckets listed as Spark's `InMemoryFileIndex` lists them for
+  *    `textFile` (so hidden, `_`, nested and empty files drop out alike),
+  *    without building the index, and cut into about one split per core
   *  - line scan + bytewise equality (`slave.go:68-105`, `slave.go:85`)
   *                                    → [[exists]]: Spark's
   *    `HadoopFileLinesReader` (the `textFile` line reader) per split,
@@ -133,18 +134,22 @@ object WordlistSearch {
   }
 
   /** The splits one probe scans: the files of its pruned buckets, as
-    * `InMemoryFileIndex` lists them, cut into splits of
-    * `max(1 MiB, ceil(bytes / defaultParallelism))` by Spark's own
-    * `splitFiles`/`getFilePartitions`. A file whose codec cannot be
-    * split (gzip) stays whole, by `TextFileFormat.isSplitable`. The
-    * bucket paths are globbed and checked to exist as `textFile` does,
-    * so a missing bucket fails here as it fails in [[prunedScan]].
+    * an `InMemoryFileIndex` over them lists them ([[FileListing]]), cut
+    * into splits of `max(1 MiB, ceil(bytes / defaultParallelism))` by
+    * Spark's own `splitFiles`/`getFilePartitions`. A file whose codec
+    * cannot be split (gzip) stays whole, as `TextFileFormat.isSplitable`
+    * decides. The bucket paths are globbed and checked to exist as
+    * `textFile` does, so a missing bucket fails here as it fails in
+    * [[prunedScan]].
     */
   def probeSplits(spark: SparkSession, base: String,
-                  ranges: Seq[ChunkRange], pw: String): Seq[FilePartition] = {
+                  ranges: Seq[ChunkRange], pw: String): Seq[FilePartition] =
+    probeSplits(spark, base, ranges, pw, sessionJobConf(spark))
+
+  private def probeSplits(spark: SparkSession, base: String, ranges: Seq[ChunkRange], pw: String,
+                          hadoopConf: JobConf): Seq[FilePartition] = {
     val ids = requiredChunks(ranges, pw)
     if (ids.isEmpty) return Seq.empty
-    val hadoopConf = sessionHadoopConf(spark)
     val roots = ids.flatMap { id =>
       val raw = new Path(s"$base/bucket=$id")
       val fs = raw.getFileSystem(hadoopConf)
@@ -153,14 +158,14 @@ object WordlistSearch {
       if (found.isEmpty) throw new AnalysisException("PATH_NOT_FOUND", Map("path" -> path.toString))
       found.map(_.getPath)
     }
-    val files = new InMemoryFileIndex(spark, roots, Map.empty, None)
-      .listFiles(Nil, Nil).flatMap(_.files)
+    val files = FileListing.dataFiles(spark, roots, hadoopConf)
     val cores = spark.sparkContext.defaultParallelism
     val maxSplitBytes = math.max(1L << 20, (files.map(_.getLen).sum + cores - 1) / cores)
-    val format = new TextFileFormat
+    val codecs = new CompressionCodecFactory(hadoopConf)
     val splits = files.flatMap { f =>
-      PartitionedFileUtil.splitFiles(f, f.getPath,
-        format.isSplitable(spark, Map.empty, f.getPath), maxSplitBytes, InternalRow.empty)
+      val codec = codecs.getCodec(f.getPath)
+      PartitionedFileUtil.splitFiles(FileStatusWithMetadata(f), f.getPath,
+        codec == null || codec.isInstanceOf[SplittableCompressionCodec], maxSplitBytes, InternalRow.empty)
     }.sortBy(-_.length)
     FilePartition.getFilePartitions(spark, splits, maxSplitBytes)
   }
@@ -169,8 +174,9 @@ object WordlistSearch {
     * candidate = :pw)` with pruning + early termination. Case-SENSITIVE
     * row filter over case-INSENSITIVE pruning, like the reference.
     *
-    * Lists [[probeSplits]], then answers from three places in turn,
-    * with no Catalyst plan and no shuffle:
+    * Builds the session's Hadoop configuration once ([[sessionJobConf]]),
+    * lists [[probeSplits]] under it, then answers from three places in
+    * turn, with no Catalyst plan and no shuffle:
     *  1. Filtered files, on the driver. Every block of every listed
     *     file that has line filters is tested for the probe's hash, and
     *     each candidate block is read with [[readRange]]: the reader
@@ -232,12 +238,12 @@ object WordlistSearch {
   def exists(spark: SparkSession, base: String,
              ranges: Seq[ChunkRange], pw: String): Boolean = {
     val listedAt = System.currentTimeMillis()
-    val splits = probeSplits(spark, base, ranges, pw)
+    val hadoopConf = sessionJobConf(spark)
+    val splits = probeSplits(spark, base, ranges, pw, hadoopConf)
     val target = pw.getBytes(StandardCharsets.UTF_8)
     val hash = lineHash(target, target.length)
     val files = splits.flatMap(_.files).distinctBy(_.filePath)
     val known = files.flatMap(f => LineFilters.get(f).map(f.filePath.urlEncoded -> _)).toMap
-    lazy val hadoopConf = sessionHadoopConf(spark)
     val ignore = IgnoreFiles(spark)
     val hitOnDriver = files.exists { f =>
       known.get(f.filePath.urlEncoded).flatten.exists(_.exists(b => b.filter.mightContainLong(hash) &&
@@ -365,7 +371,9 @@ object WordlistSearch {
     * Stops at the first equal line, unless `hashes` is given: then
     * every line's hash is added to it and the range is read to its end.
     * `stop` is polled every 4096 lines. Both the scan tasks and the
-    * driver's candidate-block reads go through here.
+    * driver's candidate-block reads go through here. The reader copies
+    * a `conf` that is not a `JobConf` into one, so callers pass a
+    * `JobConf`.
     *
     * Read failures are handled as `FileScanRDD` handles them for the
     * same file: a `FileNotFoundException` is rethrown unless
@@ -499,11 +507,17 @@ object WordlistSearch {
       Option(entries.remove(path)).foreach(e => bytes -= e.bytes)
   }
 
-  /** The Hadoop configuration a `textFile` read of this session uses:
-    * the context's, overlaid with the session's SQL configuration.
+  /** The Hadoop configuration a `textFile` read of this session uses,
+    * as `SessionState.newHadoopConf` builds it (the context's, overlaid
+    * with the session's SQL configuration), in one copy that is already
+    * the `JobConf` Hadoop's readers and path filters take.
     */
-  private def sessionHadoopConf(spark: SparkSession): Configuration =
-    spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()
+  private def sessionJobConf(spark: SparkSession): JobConf = {
+    val session = spark.asInstanceOf[classic.SparkSession]
+    val conf = new JobConf(session.sparkContext.hadoopConfiguration)
+    session.sessionState.conf.getAllConfs.foreach { case (k, v) => if (v ne null) conf.set(k, v) }
+    conf
+  }
 
   /** The tasks' Hadoop configuration, broadcast once per distinct
     * configuration: serializing its ~1k entries costs ~6 ms, a third of
@@ -533,23 +547,26 @@ object WordlistSearch {
     * end, and yields one [[SplitScan]] with every block's hashes; any
     * other split stops at its first line that equals `target` byte for
     * byte and yields a [[SplitScan]] only then. A cancelled task stops
-    * within 4096 lines; `FileScanRDD` then raises the kill.
+    * within 4096 lines; `FileScanRDD` then raises the kill. Each split
+    * copies the broadcast configuration into one `JobConf` for all its
+    * reads.
     */
   private def scanSplit(conf: Broadcast[SerializableConfiguration], ignore: IgnoreFiles,
                         target: Array[Byte], build: Set[String]): PartitionedFile => Iterator[InternalRow] =
     split => {
       val ctx = TaskContext.get()
       val stop = () => ctx.isInterrupted()
+      val jobConf = new JobConf(conf.value.value)
       val path = split.filePath.urlEncoded
       val scan =
         if (build(path)) {
           val blocks = blocksOf(split).map { b =>
             val hashes = ArrayBuilder.make[Long]
-            BlockScan(b.start, b.length, readRange(b, conf.value.value, ignore, target, hashes, stop),
+            BlockScan(b.start, b.length, readRange(b, jobConf, ignore, target, hashes, stop),
               hashes.result())
           }.toArray
           SplitScan(path, blocks.exists(_.read.found), blocks)
-        } else SplitScan(path, readRange(split, conf.value.value, ignore, target, null, stop).found, null)
+        } else SplitScan(path, readRange(split, jobConf, ignore, target, null, stop).found, null)
       if (scan.found || scan.blocks != null) Iterator.single(new GenericInternalRow(Array[Any](scan)))
       else Iterator.empty
     }

@@ -13,7 +13,10 @@ import scala.concurrent.duration.Duration
 import scala.util.Random
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.hadoop.fs.{Path, PathFilter}
+import org.apache.spark.SparkThrowable
 import org.apache.spark.sql.AnalysisException
+import org.apache.spark.sql.functions.input_file_name
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.WordlistSearch._
 
@@ -284,6 +287,56 @@ class WordlistSearchSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("probeSplits lists the files find reads: nested, hidden, partition-like, empty and filtered entries") {
+    // bucket 4 (k-p) holds, beside its part file, a word in each place a
+    // bucket listing must leave out; a session-level path filter hides
+    // *.skip. The second base adds a partition-like `_x=1/` directory,
+    // which makes `textFile` read only that directory's files, and fails
+    // a probe whose buckets it would conflict with.
+    val key = "mapreduce.input.pathFilter.class"
+    def write(dir: String, rel: String, text: String): Unit = {
+      val path = Paths.get(dir, "bucket=4", rel)
+      Files.createDirectories(path.getParent)
+      Files.write(path, text.getBytes(UTF_8))
+    }
+    val plain = SparkTestBase.tmpDir("wordlist_listing")
+    writeBucketed(words, ranges, plain)
+    Seq("part-1.txt" -> "mroot\n", "sub/part-0.txt" -> "mnested\n", "empty.txt" -> "",
+      "_tmp/part-0.txt" -> "mtmp\n", ".staging/part-0.txt" -> "mstaging\n", "part-2.skip" -> "mskip\n")
+      .foreach { case (rel, text) => write(plain, rel, text) }
+    val partitioned = SparkTestBase.tmpDir("wordlist_listing_partitioned")
+    writeBucketed(words, ranges, partitioned)
+    write(partitioned, "part-1.txt", "mroot\n")
+    write(partitioned, "_x=1/part-0.txt", "mpart\n")
+    Seq(plain, partitioned).foreach(date(_, Old))
+    def listed(dir: String, p: String) = probeSplits(spark, dir, ranges, p).flatMap(_.files.map(_.urlEncodedPath)).toSet
+    def read(dir: String, p: String) =
+      prunedScan(spark, dir, ranges, p).select(input_file_name()).distinct().collect().map(_.getString(0)).toSet
+    def nonEmpty(files: Array[String]) = files.filter(f => new java.io.File(new java.net.URI(f)).length > 0).toSet
+    def conflicts(body: => Any): Unit = intercept[Exception](body) match {
+      case e: SparkThrowable => assert(e.getCondition === "CONFLICTING_DIRECTORY_STRUCTURES")
+      case e => fail(e)
+    }
+    try {
+      spark.conf.set(key, classOf[SkipPathFilter].getName)
+      for (pass <- Seq("cold", "warm")) {
+        agree(plain, Seq("mroot", "mnested", "mtmp", "mstaging", "mskip", "kiwi", "pear", "mzzz"), pass)
+        agree(partitioned, Seq("mroot", "mpart", "mzzz"), pass)
+        Seq("m", "k", "p").foreach { p =>
+          assert(listed(plain, p) === nonEmpty(prunedScan(spark, plain, ranges, p).inputFiles), s"$p $pass")
+          assert(listed(plain, p) === read(plain, p), s"$p $pass")
+        }
+        assert(listed(partitioned, "m") === read(partitioned, "m"), pass)
+        Seq("kiwi", "pear").foreach { p =>
+          conflicts(find(spark, partitioned, ranges, p))
+          conflicts(exists(spark, partitioned, ranges, p))
+        }
+      }
+      assert(exists(spark, plain, ranges, "mroot") && !exists(spark, plain, ranges, "mskip"))
+      assert(exists(spark, partitioned, ranges, "mpart"))
+    } finally spark.conf.unset(key)
+  }
+
   test("readRange skips or fails on a deleted file as the scan job does") {
     val dir = SparkTestBase.tmpDir("wordlist_deleted")
     writeBucketed(words, ranges, dir)
@@ -484,4 +537,11 @@ class WordlistSearchSpec extends AnyFunSuite with SparkTestBase {
     assert(jobs === Seq(1, 1, 0), "the second call builds the file the first left out")
     agree(dir, miss +: hits)
   }
+}
+
+/** Hides `*.skip` files from a listing, as a session's
+  * `mapreduce.input.pathFilter.class`.
+  */
+class SkipPathFilter extends PathFilter {
+  override def accept(path: Path): Boolean = !path.getName.endsWith(".skip")
 }

@@ -8,6 +8,10 @@ Reads <verifyOutDir>/oracle_sql.json, registers each parquet table from
 Spark result parquet at <verifyOutDir>/<name>/. Columns are sorted by name
 before compare (driver behavior per the builder prompt). Reports per-query
 PASS/FAIL with the first differing cell.
+
+DuckDB is bounded to half of the machine's memory and one thread per
+usable core, and spills to <verifyOutDir>/duckdb_tmp, so an oracle too
+large for the box spills or fails on its own instead of starving it.
 """
 import json
 import sys
@@ -25,9 +29,19 @@ def norm(df: pd.DataFrame) -> pd.DataFrame:
     return df.reset_index(drop=True)
 
 
+def bounded_connection(out_dir: str) -> duckdb.DuckDBPyConnection:
+    mem_kib = next(int(line.split()[1]) for line in open("/proc/meminfo")
+                   if line.startswith("MemTotal:"))
+    return duckdb.connect(config={
+        "memory_limit": f"{mem_kib // 2 // 1024}MiB",
+        "threads": len(os.sched_getaffinity(0)),
+        "temp_directory": os.path.join(out_dir, "duckdb_tmp"),
+    })
+
+
 def main() -> int:
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
-    con = duckdb.connect()
+    con = bounded_connection(out_dir)
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
         if os.path.exists(p):
